@@ -64,20 +64,6 @@ def rows_from_df(df):
     return df.toLocalIterator()
 
 
-def rows_to_json_stream(df, write):
-    """Stream a DataFrame as a JSON array using toLocalIterator —
-    one partition in driver memory at a time."""
-    write(b"[")
-    first = True
-    for row in df.toLocalIterator():
-        if not first:
-            write(b",")
-        first = False
-        obj = {k: encode_value(v) for k, v in row.asDict().items()}
-        write(json.dumps(obj).encode("utf-8"))
-    write(b"]")
-
-
 class LightningAPIServer:
     """Minimal threaded HTTP server over a LightningContext.
 

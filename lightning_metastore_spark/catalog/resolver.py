@@ -1,15 +1,17 @@
-"""`lightning.*` name resolution: rewrite standard SQL so Catalyst sees
-plain temp views.
+"""`lightning.*` name resolution through Spark's own SQL parser.
 
 The reference registers a DSv2 TableCatalog named `lightning` and lets
 the analyzer call `loadTable` per identifier (SURVEY.md §3 EP2). PySpark
-cannot register a Python TableCatalog, so the idiomatic equivalent is a
-resolver pass: find `lightning.datasource.**` / `lightning.metastore.**`
-identifier chains in the query text (outside quoted regions), resolve
-each to a DataFrame via the metastore + catalog units, register it as a
-deterministic temp view, and splice the view name back in. The rewritten
-text goes to `spark.sql()` — Catalyst then owns analysis, optimization
-(pushdown into the just-registered scans) and execution.
+cannot register a Python TableCatalog, so the resolver does the
+catalog's part around the analyzer: it parses the statement with
+Spark's parser, resolves every relation named `lightning.*` (in
+subqueries, CTE bodies, `VERSION`/`TIMESTAMP AS OF` and `EXPLAIN` too)
+to a DataFrame via the metastore + catalog units, and splices a `{tN}`
+placeholder in at the relation's offsets. `spark.sql(template,
+**dataframes)` then analyses the statement; PySpark's `_pyspark_<uuid>`
+views exist only while it does. Comments, strings and backticks are the
+parser's business; like any Spark identifier, a hyphenated name must be
+backticked (`` lightning.datasource.file.`my-src`.t ``).
 
 USL tables re-enter resolution with their activation SQL (the reference
 nests `context.sql(...)` inside the scan, `usl/USLTableScan.scala:48-51`);
@@ -18,61 +20,36 @@ we add cycle detection, which the reference lacks (documented divergence).
 
 from __future__ import annotations
 
-import hashlib
+import datetime as dt
+import itertools
 import os
 import re
-from typing import Optional
+import threading
+from collections import Counter
+from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from lightning_metastore_spark.catalog.units import load_catalog_unit
+from lightning_metastore_spark.catalog.units import (
+    DeltaCatalogUnit,
+    IcebergCatalogUnit,
+    load_catalog_unit,
+)
 from lightning_metastore_spark.model.metastore import (
     DATASOURCE_ROOT,
     METASTORE_ROOT,
 )
 
+# a `lightning.datasource|metastore...` chain, for the hint extraction
 _CHAIN = re.compile(
     r"\blightning\.(?:datasource|metastore)(?:\.[A-Za-z_][A-Za-z0-9_\-]*)+",
     re.IGNORECASE,
 )
-# `FROM lightning.datasource.x.y VERSION AS OF 3` / `TIMESTAMP AS OF
-# '2024-01-01'` — the reference's Iceberg time-travel surface
-# (`RegisterIcebergDataSourceTestSuite.scala:178-184`), also honored for
-# Delta. Only datasource chains: time travel over metastore snapshots
-# is meaningless.
-_TIME_TRAVEL = re.compile(
-    r"(?P<chain>\blightning\.datasource(?:\.[A-Za-z_][A-Za-z0-9_\-]*)+)"
-    r"\s+(?:FOR\s+)?(?P<kind>VERSION|SYSTEM_VERSION|TIMESTAMP|SYSTEM_TIME)"
-    r"\s+AS\s+OF\s+(?P<val>'(?:[^']|'')*'|\d+)",
-    re.IGNORECASE,
-)
-# Split SQL into quoted and unquoted segments so rewrites never touch
-# string literals or backtick-quoted identifiers.
+# quoted regions, blanked before the hint extraction matches keywords
 _QUOTED = re.compile(r"('(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`(?:[^`]|``)*`)")
-
-# fixed-width type sizes for the row-width estimate; variable-width
-# (string/binary/decimal/nested) priced at 20 bytes, matching Spark's
-# own defaultSize heuristics closely enough for a broadcast decision
-_TYPE_WIDTH = {"byte": 1, "boolean": 1, "short": 2, "integer": 4,
-               "float": 4, "date": 4, "long": 8, "double": 8,
-               "timestamp": 8, "timestamp_ntz": 8}
-
-
-def _est_row_width(schema) -> int:
-    return 8 + sum(_TYPE_WIDTH.get(f.dataType.typeName(), 20)
-                   for f in schema.fields)
-
-
-_SIZE_SUFFIX = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
-                "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30}
-
-
-def _parse_size_bytes(raw: str) -> int:
-    """Parse Spark size-conf strings ('10485760', '10MB', '-1')."""
-    m = re.fullmatch(r"(-?\d+)\s*([a-zA-Z]*)", str(raw).strip())
-    if not m:
-        return -1
-    return int(m.group(1)) * _SIZE_SUFFIX.get(m.group(2).lower(), 1)
+# how often a statement names `lightning.` — more often than it has
+# lightning relations means some column is qualified by a full chain
+_MENTION = re.compile(r"\blightning`?\s*\.", re.IGNORECASE)
 
 
 class ResolutionError(Exception):
@@ -87,55 +64,31 @@ class ResolutionError(Exception):
 # against a mismatched column — `scol = DATE '2024-01-01'` makes
 # Spark cast the STRING COLUMN to date, so comparing raw string stats
 # was the r15 judge's confirmed wrong-answer edge.
-_SIMPLE_CONJ = re.compile(
-    r"^\s*((?:[A-Za-z_][\w\-]*\.)*)([A-Za-z_][\w]*)\s*(<=|>=|=|<|>)\s*"
-    r"(?:(-?\d+(?:\.\d+)?)|(?:(DATE|TIMESTAMP)\s+)?'((?:[^']|'')*)')\s*$",
-    re.IGNORECASE,
-)
+_COL = r"((?:[A-Za-z_][\w\-]*\.)*)([A-Za-z_][\w]*)"  # (qualifier, col)
+_LIT = r"(?:(-?\d+(?:\.\d+)?)|(?:(DATE|TIMESTAMP)\s+)?'((?:[^']|'')*)')"
+_OP = r"\s*(<=|>=|=|<|>)\s*"
+_SIMPLE_CONJ = re.compile(rf"^\s*{_COL}{_OP}{_LIT}\s*$", re.I)
 # the reversed spelling `literal <op> col` — the operator flips
 # (`5 < col` == `col > 5`)
-_SIMPLE_CONJ_REV = re.compile(
-    r"^\s*(?:(-?\d+(?:\.\d+)?)|(?:(DATE|TIMESTAMP)\s+)?'((?:[^']|'')*)')"
-    r"\s*(<=|>=|=|<|>)\s*"
-    r"((?:[A-Za-z_][\w\-]*\.)*)([A-Za-z_][\w]*)\s*$",
-    re.IGNORECASE,
-)
+_SIMPLE_CONJ_REV = re.compile(rf"^\s*{_LIT}{_OP}{_COL}\s*$", re.I)
 _FLIP_OP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "="}
 # `[qualifier.]col BETWEEN lit AND lit` — reconstituted from the
 # AND-split pieces and rewritten to `>= AND <=` (r15 verdict #3: a
 # BETWEEN used to disable the whole WHERE). NOT BETWEEN never matches
 # (the column token is anchored directly before BETWEEN).
 _BETWEEN_CONJ = re.compile(
-    r"^\s*((?:[A-Za-z_][\w\-]*\.)*)([A-Za-z_][\w]*)\s+BETWEEN\s+"
-    r"(?:(-?\d+(?:\.\d+)?)|(?:(DATE|TIMESTAMP)\s+)?'((?:[^']|'')*)')"
-    r"\s+AND\s+"
-    r"(?:(-?\d+(?:\.\d+)?)|(?:(DATE|TIMESTAMP)\s+)?'((?:[^']|'')*)')"
-    r"\s*$",
-    re.IGNORECASE,
-)
+    rf"^\s*{_COL}\s+BETWEEN\s+{_LIT}\s+AND\s+{_LIT}\s*$", re.I)
 # `[qualifier.]col IS [NOT] NULL` — nullCount/partitionValues prune
 # these. IS NULL is NOT null-rejecting, so it is credited only in
 # single-relation queries (an outer join's null-extended rows satisfy
 # it — pruning the nullable side would change results).
-_NULL_CONJ = re.compile(
-    r"^\s*((?:[A-Za-z_][\w\-]*\.)*)([A-Za-z_][\w]*)\s+IS\s+"
-    r"(NOT\s+)?NULL\s*$",
-    re.IGNORECASE,
-)
-_LITERAL = (r"(?:-?\d+(?:\.\d+)?|(?:(?:DATE|TIMESTAMP)\s+)?"
-            r"'(?:[^']|'')*')")
+_NULL_CONJ = re.compile(rf"^\s*{_COL}\s+IS\s+(NOT\s+)?NULL\s*$", re.I)
 # `[qualifier.]col IN (lit, lit, ...)` — a file admits when ANY
 # member admits; every member must parse or the conjunct is skipped
 # (pruning on a subset would drop files the other members match)
+_LITERAL_ONE = re.compile(_LIT, re.I)
 _IN_CONJ = re.compile(
-    r"^\s*((?:[A-Za-z_][\w\-]*\.)*)([A-Za-z_][\w]*)\s+IN\s*\(\s*"
-    r"(" + _LITERAL + r"(?:\s*,\s*" + _LITERAL + r")*)\s*\)\s*$",
-    re.IGNORECASE,
-)
-_LITERAL_ONE = re.compile(
-    r"(-?\d+(?:\.\d+)?)|(?:(DATE|TIMESTAMP)\s+)?'((?:[^']|'')*)'",
-    re.IGNORECASE,
-)
+    rf"^\s*{_COL}\s+IN\s*\(\s*((?:{_LIT}\s*,\s*)*{_LIT})\s*\)\s*$", re.I)
 _PRUNE_TAIL = re.compile(
     r"\b(GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|WINDOW|UNION|EXCEPT|"
     r"INTERSECT|DISTRIBUTE\s+BY|CLUSTER\s+BY|SORT\s+BY)\b",
@@ -156,23 +109,20 @@ def _typed_literal(num: Optional[str], kw: Optional[str],
     """(number group, DATE/TIMESTAMP keyword, quoted body) -> the
     conjunct literal, or None when the typed literal does not parse
     canonically (the conjunct is then skipped — sound)."""
-    import datetime as dt
     if num is not None:
         return float(num) if "." in num else int(num)
     s = raw.replace("''", "'")
     if kw is None:
         return s
+    s = s.strip()
     if kw.upper() == "DATE":
-        if not _CANON_DATE.fullmatch(s.strip()):
-            return None
-        return dt.date.fromisoformat(s.strip())
+        return dt.date.fromisoformat(s) if _CANON_DATE.fullmatch(s) else None
     # TIMESTAMP literal: keep wall-clock fields (naive) or the
     # explicit offset; the pruners convert through the session tz
-    if not _CANON_TS.fullmatch(s.strip()):
+    if not _CANON_TS.fullmatch(s):
         return None
     try:
-        return dt.datetime.fromisoformat(
-            s.strip().replace("Z", "+00:00"))
+        return dt.datetime.fromisoformat(s.replace("Z", "+00:00"))
     except ValueError:
         return None
 
@@ -184,6 +134,14 @@ def _mask_quoted(sql: str) -> str:
     parts = _QUOTED.split(sql)
     return "".join(p if i % 2 == 0 else " " * len(p)
                    for i, p in enumerate(parts))
+
+
+def _text_unreadable(sql: str, masked: str) -> bool:
+    """True when the conjunct regexes cannot read ``sql`` faithfully:
+    a comment outside quotes (`WHERE v >= 0 -- AND id >= 35` would
+    credit the commented-out conjunct) or a backslash (`\\'` ends a
+    `_QUOTED` region early). Skipping hints is always sound."""
+    return "\\" in sql or "--" in masked or "/*" in masked
 
 
 _JOIN_TYPE_TAIL = re.compile(
@@ -258,6 +216,8 @@ def extract_prune_conjuncts(sql: str
     kept files. `a BETWEEN x AND y` is reconstituted from the split
     pieces and rewritten to two conjuncts."""
     masked = _mask_quoted(sql)
+    if _text_unreadable(sql, masked):
+        return None
     if len(re.findall(r"\bSELECT\b", masked, re.I)) != 1:
         return None  # subquery / set operation
     m_from = re.search(r"\bFROM\b", masked, re.I)
@@ -285,9 +245,7 @@ def extract_prune_conjuncts(sql: str
             qual_owner[q] = idx if q not in qual_owner else _AMBIG
     # a chain registered twice in FROM (self-join) cannot take one
     # alias's conjuncts — exclude it from pruning entirely
-    seen: dict = {}
-    for name, _a in rels:
-        seen[name.lower()] = seen.get(name.lower(), 0) + 1
+    seen = Counter(name.lower() for name, _a in rels)
     prunable = {idx for idx, (name, _a) in enumerate(rels)
                 if _CHAIN.fullmatch(name) and seen[name.lower()] == 1}
     if not prunable:
@@ -368,13 +326,13 @@ def _piece_conjuncts(piece: str) -> list[tuple]:
     and left to the CALLER's null-rejection policy."""
     m = _SIMPLE_CONJ.match(piece)
     if m:
-        lit = _typed_literal(m.group(4), m.group(5), m.group(6))
+        lit = _typed_literal(*m.group(4, 5, 6))
         if lit is None:
             return []
         return [(m.group(1).rstrip("."), m.group(2), m.group(3), lit)]
     mr = _SIMPLE_CONJ_REV.match(piece)
     if mr:
-        lit = _typed_literal(mr.group(1), mr.group(2), mr.group(3))
+        lit = _typed_literal(*mr.group(1, 2, 3))
         if lit is None:
             return []
         return [(mr.group(5).rstrip("."), mr.group(6),
@@ -383,8 +341,8 @@ def _piece_conjuncts(piece: str) -> list[tuple]:
     if mb:
         qual = mb.group(1).rstrip(".")
         col = mb.group(2)
-        lo = _typed_literal(mb.group(3), mb.group(4), mb.group(5))
-        hi = _typed_literal(mb.group(6), mb.group(7), mb.group(8))
+        lo = _typed_literal(*mb.group(3, 4, 5))
+        hi = _typed_literal(*mb.group(6, 7, 8))
         out = []
         if lo is not None:
             out.append((qual, col, ">=", lo))
@@ -399,8 +357,7 @@ def _piece_conjuncts(piece: str) -> list[tuple]:
     if mi:
         lits = []
         for lm in _LITERAL_ONE.finditer(mi.group(3)):
-            lit = _typed_literal(lm.group(1), lm.group(2),
-                                 lm.group(3))
+            lit = _typed_literal(*lm.group(1, 2, 3))
             if lit is None:
                 return []
             lits.append(lit)
@@ -420,6 +377,8 @@ def simple_where_conjuncts(predicate: str) -> list[tuple]:
     disjunction). Always sound — the full predicate still executes on
     the kept files; these only shrink the file list."""
     masked = _mask_quoted(predicate)
+    if _text_unreadable(predicate, masked):
+        return []
     merged = _split_conjunct_pieces(predicate, masked)
     if merged is None:
         return []
@@ -456,6 +415,68 @@ def _path_fingerprint(path: str) -> Optional[tuple]:
         return None
 
 
+class _Relation(NamedTuple):
+    """One table reference of a parsed statement."""
+    start: int          # text span of the reference: the name, plus a
+    stop: int           # VERSION/TIMESTAMP AS OF clause (stop exclusive)
+    parts: tuple        # the name's parts, as written
+    tt: Optional[tuple]  # ("version" | "timestamp", value) or None
+
+
+def _is_lightning(parts) -> bool:
+    return len(parts) > 1 and parts[0].lower() == "lightning"
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _parts(scala_seq) -> tuple:
+    return tuple(scala_seq.mkString("\x00").split("\x00"))
+
+
+def escape_braces(text: str) -> str:
+    """Literal text of a `spark.sql(template, **kwargs)` template."""
+    return text.replace("{", "{{").replace("}", "}}")
+
+
+def _splice(sql: str, edits: list[tuple], escape=escape_braces) -> str:
+    """``sql`` with each (start, stop, text) span replaced by text; the
+    text between spans passes through ``escape``."""
+    out, pos = [], 0
+    for start, stop, text in sorted(edits):
+        out += [escape(sql[pos:start]), text]
+        pos = stop
+    return "".join(out) + escape(sql[pos:])
+
+
+def _tree_nodes(plan, keep):
+    """The nodes of ``plan`` (subqueries and CTE bodies included) whose
+    line in Spark's numbered tree string passes ``keep``: one py4j call
+    renders the tree, where a node-by-node walk costs ~1 ms per node.
+    If a literal's line break spreads a node over two lines, every
+    node is visited."""
+    lines = plan.numberedTreeString().rstrip("\n").split("\n")
+    aligned = plan.apply(len(lines) - 1) is not None
+    for i in range(len(lines)) if aligned else itertools.count():
+        if aligned and not keep(lines[i]):
+            continue
+        node = plan.apply(i)
+        if node is None:
+            return
+        yield node
+
+
+def _time_travel(node) -> tuple:
+    if node.version().isDefined():
+        return ("version", node.version().get())
+    ts = node.timestamp().get()
+    if ts.nodeName() != "Literal":
+        raise ResolutionError(
+            f"TIMESTAMP AS OF takes a literal, got {ts.sql()}")
+    return ("timestamp", ts.toString())
+
+
 class Resolver:
     def __init__(self, spark, metastore, current_user: Optional[str] = None):
         self.spark = spark
@@ -467,7 +488,9 @@ class Resolver:
         # spark.read schema-inference/listing round (~80 ms driver-side
         # per table at sf0.1 — the whole catalog_overhead delta); a
         # DataFrame is an immutable logical plan, so reuse is safe.
+        # REST request threads share it, hence the lock.
         self._file_df_cache: dict = {}
+        self._file_df_lock = threading.Lock()
 
     # -- public -------------------------------------------------------------
 
@@ -478,38 +501,23 @@ class Resolver:
         lacks (SURVEY §4: JDBC sources otherwise scan whole tables minus
         pushed filters). Returns a DataFrame or None when not applicable.
 
-        Applicability guard: the statement is a SELECT/WITH, every
-        FROM/JOIN identifier is a lightning.* chain, and all chains
-        resolve (metastore-only, no scans) to one JDBC datasource.
-        Caveat: the pushed text runs in the REMOTE dialect — Spark-only
-        functions make it inapplicable; callers can disable via
-        LightningContext(jdbc_pushdown=False).
+        Applicability guard: a SELECT/WITH whose relations are all
+        lightning.* chains (no time travel) of one JDBC datasource,
+        found from the metastore alone; each chain becomes its name in
+        the source. The pushed text runs in the REMOTE dialect, so
+        Spark-only functions make it inapplicable.
         """
-        import re as _re
-
         head = sql.lstrip().split(None, 1)
         if not head or head[0].upper() not in ("SELECT", "WITH"):
             return None
-        parts = _QUOTED.split(sql)
+        rels = self._parse(sql)[2]
         target = None  # (DataSource key, DataSource)
-        for i, part in enumerate(parts):
-            if i % 2 == 1:
-                continue
-            for m in _re.finditer(r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w.\-]*)",
-                                  part, _re.I):
-                ident = m.group(1)
-                if not ident.lower().startswith("lightning."):
-                    return None  # touches a non-lightning relation
-        chains = {c for i, part in enumerate(parts) if i % 2 == 0
-                  for c in _CHAIN.findall(part)}
-        if not chains:
-            return None
-        rewrites = {}
-        for chain in chains:
-            path = chain.split(".")[1:]
-            if not path or path[0].lower() != DATASOURCE_ROOT:
+        edits = []
+        for r in rels:
+            if (not _is_lightning(r.parts) or r.tt is not None
+                    or r.parts[1].lower() != DATASOURCE_ROOT):
                 return None
-            hit = self.metastore.find_parent_datasource(path[1:])
+            hit = self.metastore.find_parent_datasource(list(r.parts[2:]))
             if hit is None:
                 return None
             ds, residual = hit
@@ -520,150 +528,152 @@ class Resolver:
                 target = (key, ds)
             elif target[0] != key:
                 return None  # spans two sources -> federate via Spark
-            rewrites[chain] = ".".join(residual)
-        pushed_parts = list(parts)
-        for i, part in enumerate(pushed_parts):
-            if i % 2 == 1:
-                continue
-            for chain, native in sorted(rewrites.items(), key=lambda kv: -len(kv[0])):
-                part = part.replace(chain, native)
-            pushed_parts[i] = part
-        pushed = "".join(pushed_parts)
+            edits.append((r.start, r.stop, ".".join(residual)))
+        if target is None:
+            return None
         opts = dict(target[1].options)
-        opts["dbtable"] = f"({pushed}) pushed_q"
+        opts["dbtable"] = f"({_splice(sql, edits, escape=str)}) pushed_q"
         return self.spark.read.format("jdbc").options(**opts).load()
 
-    def resolve_sql(self, sql: str, _stack: frozenset = frozenset()) -> str:
-        """Rewrite every lightning.* table reference to a temp-view
-        name. SELECTs over plain (possibly joined) relations with
-        simple WHERE conjuncts hand each relation's conjuncts to the
-        Delta/Iceberg units as PLANNING hints — stats/manifest-bounds
-        file skipping (`extract_prune_conjuncts` documents the
-        soundness guards); Catalyst still applies the full predicate
-        to the kept files."""
-        sql = self._rewrite_time_travel(sql)
-        prune_hit = extract_prune_conjuncts(sql)
-        parts = _QUOTED.split(sql)
-        for i, part in enumerate(parts):
-            if i % 2 == 1:  # quoted segment — leave untouched
-                continue
-            parts[i] = _CHAIN.sub(
-                lambda m: self._rewrite_chain(m.group(0), _stack,
-                                              prune_hit), part)
-        return "".join(parts)
+    def resolve_sql(self, sql: str,
+                    _stack: frozenset = frozenset()) -> DataFrame:
+        """Analyse ``sql`` with every lightning.* relation resolved to
+        a `{tN}` placeholder of `spark.sql(template, **dataframes)`.
+        Simple WHERE conjuncts of plain (possibly joined) relations
+        reach the Delta/Iceberg units as file-skipping hints
+        (`extract_prune_conjuncts` documents the soundness guards);
+        Catalyst still applies the full predicate to the kept files."""
+        if "lightning" not in sql.lower():
+            return self.spark.sql(sql)
+        root, plan, rels = self._parse(sql)
+        rels = [r for r in rels if _is_lightning(r.parts)]
+        if not rels:
+            return self.spark.sql(sql)
+        if (root.nodeName() == "CreateViewCommand"
+                and root.viewType().toString() != "PersistedView"):
+            return self._create_temp_view(root, _stack)
+        prune_hit = extract_prune_conjuncts(sql) or {}
+        dfs: dict = {}
+        placeholder: dict = {}  # (parts, tt, prune) -> "tN"
+        edits = []
+        for r in rels:
+            prune = None if r.tt else prune_hit.get(sql[r.start:r.stop])
+            key = (tuple(p.lower() for p in r.parts), r.tt, repr(prune))
+            if key not in placeholder:
+                name = placeholder[key] = f"t{len(placeholder)}"
+                try:
+                    dfs[name] = self.load_table(list(r.parts[1:]), _stack,
+                                                prune=prune, tt=r.tt)
+                except Exception as e:
+                    raise ResolutionError(
+                        f"cannot resolve {sql[r.start:r.stop]!r}: {e}"
+                    ) from e
+            edits.append((r.start, r.stop, "{" + placeholder[key] + "}"))
+        if len(_MENTION.findall(sql)) > len(rels):
+            by_parts = {k[0]: v for k, v in placeholder.items()}
+            edits += self._chain_column_edits(plan, by_parts)
+        return self.spark.sql(_splice(sql, edits), **dfs)
 
     def load_table(self, path: list[str],
                    _stack: frozenset = frozenset(),
-                   prune: Optional[list[tuple]] = None) -> DataFrame:
+                   prune: Optional[list[tuple]] = None,
+                   tt: Optional[tuple] = None) -> DataFrame:
         """Resolve a full path (['datasource'|'metastore', ...]) to a
         DataFrame. Raises ResolutionError when nothing matches.
         ``prune`` (datasource root only) carries simple WHERE
-        conjuncts down to lakehouse units for file skipping."""
+        conjuncts down to lakehouse units for file skipping; ``tt`` is
+        a ("version" | "timestamp", value) time-travel target."""
         root = path[0].lower()
         if root == DATASOURCE_ROOT:
-            return self._load_datasource_table(path[1:], prune=prune)
-        if root == METASTORE_ROOT:
-            return self._load_metastore_table(path[1:], _stack)
-        raise ResolutionError(f"unknown lightning root: {path[0]}")
+            return self._load_datasource_table(path[1:], tt=tt, prune=prune)
+        if root != METASTORE_ROOT:
+            raise ResolutionError(f"unknown lightning root: {path[0]}")
+        if tt is not None:
+            raise ResolutionError("time travel (VERSION/TIMESTAMP AS OF) "
+                                  "applies to lightning.datasource only")
+        return self._load_metastore_table(path[1:], _stack)
 
-    # -- chain rewriting ----------------------------------------------------
+    # -- parsing ------------------------------------------------------------
 
-    def _rewrite_time_travel(self, sql: str) -> str:
-        """Replace `<datasource chain> [FOR] VERSION|TIMESTAMP AS OF v`
-        with a temp view over the time-travelled load. Runs before the
-        quoted-split pass because a TIMESTAMP literal is itself a quoted
-        region — so instead of splitting, the _QUOTED tokenization is
-        used to compute the UNQUOTED character ranges, and a match is
-        rewritten only when its chain starts in one: chains inside
-        single-quoted strings, double-quoted strings, and backtick
-        identifiers are all left untouched (same protection every other
-        chain rewrite gets), while the match's own trailing timestamp
-        literal may still span into a quoted region."""
-        unquoted: list[tuple[int, int]] = []
-        pos = 0
-        for i, part in enumerate(_QUOTED.split(sql)):
-            if i % 2 == 0:
-                unquoted.append((pos, pos + len(part)))
-            pos += len(part)
-
-        def repl(m: re.Match) -> str:
-            s = m.start("chain")
-            if not any(lo <= s < hi for lo, hi in unquoted):
-                return m.group(0)  # inside a quoted region
-            path = m.group("chain").split(".")[1:]
-            kind = m.group("kind").upper()
-            raw = m.group("val")
-            if raw.startswith("'"):
-                value = raw[1:-1].replace("''", "'")
-            else:
-                value = int(raw)
-            if kind in ("VERSION", "SYSTEM_VERSION"):
-                tt = ("version", value)
-            else:
-                tt = ("timestamp", str(value))
-            df = self._load_datasource_table(path[1:], tt=tt)
-            digest = hashlib.md5(
-                (".".join(p.lower() for p in path)
-                 + f"|{kind}|{value}").encode()).hexdigest()[:12]
-            view = f"l_{path[-1].lower()}_tt_{digest}"
-            df.createOrReplaceTempView(view)
-            return view
-
-        return _TIME_TRAVEL.sub(repl, sql)
-
-    def _rewrite_chain(self, chain: str, _stack: frozenset,
-                       prune_hit: Optional[dict] = None) -> str:
-        """A matched chain may include trailing column projections
-        (`lightning.datasource.f.t.orders.o_orderkey`): resolve the
-        longest prefix that names a table, keep the rest. When the
-        chain is one of the query's pruned FROM relations, its
-        conjuncts ride into the load as planning hints (and the view
-        name gets its own digest so unpruned registrations are never
-        clobbered for other callers)."""
-        prune = (prune_hit or {}).get(chain)
-        parts = chain.split(".")[1:]  # drop leading 'lightning'
-        last_err: Optional[Exception] = None
-        for cut in range(len(parts), 1, -1):
-            prefix = parts[:cut]
-            try:
-                df = self.load_table(prefix, _stack,
-                                     prune=prune if cut == len(parts)
-                                     else None)
-            except Exception as e:  # try a shorter prefix
-                # keep the LONGEST-prefix error — it names the actual
-                # failure (e.g. "not activated"), not a fallback miss
-                if last_err is None:
-                    last_err = e
+    def _parse(self, sql: str) -> tuple:
+        """(parsed statement, the plan holding its relations, those
+        relations in text order). EXPLAIN keeps its plan in a field, not
+        as a child. Spark's ParseException propagates."""
+        root = (self.spark._jsparkSession.sessionState().sqlParser()
+                .parsePlan(sql))
+        plan = (root.logicalPlan() if root.nodeName() == "ExplainCommand"
+                else root)
+        rels = []
+        # a time-travel node's line names its relation too
+        for node in _tree_nodes(plan, lambda ln: "UnresolvedRelation [" in ln):
+            kind = node.nodeName()
+            if kind not in ("UnresolvedRelation", "RelationTimeTravel"):
                 continue
-            rest = parts[cut:]
-            # Spark SQL identifiers are case-insensitive by default —
-            # compare accordingly, or O_ORDERKEY vs o_orderkey would
-            # fail resolution that plain Spark SQL accepts
-            if rest and rest[0].lower() not in {c.lower() for c in df.columns}:
-                # the trailing segment is neither a table (longer prefix
-                # failed) nor a column of this table — surface the
-                # longer prefix's error instead of leaking a mangled
-                # view name from Spark's analyzer
-                if last_err is None:
-                    last_err = ResolutionError(
-                        f"{'.'.join(['lightning'] + prefix + [rest[0]])} is "
-                        f"neither a table nor a column of "
-                        f"lightning.{'.'.join(prefix)}")
-                continue
-            view = self._view_name(prefix)
-            if prune and cut == len(parts):
-                digest = hashlib.md5(
-                    repr(prune).encode()).hexdigest()[:8]
-                view = f"{view}_pr_{digest}"
-            df.createOrReplaceTempView(view)
-            return ".".join([view] + rest)
-        raise ResolutionError(
-            f"cannot resolve {chain!r}: {last_err}") from last_err
+            timed = kind == "RelationTimeTravel"
+            rel = node.relation() if timed else node
+            rels.append(_Relation(
+                rel.origin().startIndex().get(),
+                node.origin().stopIndex().get() + 1,
+                _parts(rel.multipartIdentifier()),
+                _time_travel(node) if timed else None))
+        return root, plan, sorted(rels)
 
-    @staticmethod
-    def _view_name(path: list[str]) -> str:
-        digest = hashlib.md5(".".join(p.lower() for p in path).encode()).hexdigest()[:12]
-        return f"l_{path[-1].lower()}_{digest}"
+    def _chain_column_edits(self, plan, by_parts: dict) -> list[tuple]:
+        """Edits that requalify columns written with a full chain
+        (`lightning.datasource.f.t.orders.o_orderkey`, `... .orders.*`)
+        by the placeholder of the statement's relation with the longest
+        matching name. Other attributes are left to the analyzer."""
+        edits = []
+        # a long expression list prints as "... N more fields"
+        for node in _tree_nodes(plan, lambda ln: "lightning" in ln.lower()
+                                or "more field" in ln):
+            for expr in _seq(node.expressions()):
+                for leaf in _seq(expr.collectLeaves()):
+                    kind = leaf.nodeName()
+                    star = kind == "UnresolvedStar"
+                    if star and leaf.target().isDefined():
+                        parts = _parts(leaf.target().get())
+                    elif kind == "UnresolvedAttribute":
+                        parts = _parts(leaf.nameParts())
+                    else:
+                        continue
+                    if not _is_lightning(parts):
+                        continue
+                    low = tuple(p.lower() for p in parts)
+                    longest = len(parts) if star else len(parts) - 1
+                    cut = next((n for n in range(longest, 1, -1)
+                                if low[:n] in by_parts), None)
+                    if cut is None:
+                        continue
+                    text = "{" + by_parts[low[:cut]] + "}" + "".join(
+                        ".`" + p.replace("`", "``") + "`" for p in parts[cut:])
+                    o = leaf.origin()
+                    edits.append((o.startIndex().get(),
+                                  o.stopIndex().get() + 1,
+                                  text + (".*" if star else "")))
+        return edits
+
+    def _create_temp_view(self, cmd, _stack: frozenset) -> DataFrame:
+        """CREATE [OR REPLACE] [GLOBAL] TEMP VIEW over lightning tables.
+        A temp view made by SQL keeps its text and re-analyses it on
+        every use, and that text would name views that live only while
+        one statement is analysed. One made from a DataFrame keeps the
+        analysed plan, so the view is registered that way."""
+        cols = _seq(cmd.userSpecifiedColumns())
+        if cmd.comment().isDefined() or any(c._2().isDefined() for c in cols):
+            raise ResolutionError("a temp view over lightning tables "
+                                  "takes no COMMENT")
+        df = self.resolve_sql(cmd.originalText().get(), _stack)
+        if cols:
+            df = df.toDF(*[c._1() for c in cols])
+        name = cmd.name().table()
+        if cmd.viewType().toString() == "GlobalTempView":
+            (df.createOrReplaceGlobalTempView if cmd.replace()
+             else df.createGlobalTempView)(name)
+        else:
+            (df.createOrReplaceTempView if cmd.replace()
+             else df.createTempView)(name)
+        return self.spark.range(0).select()
 
     # -- datasource root ----------------------------------------------------
 
@@ -677,49 +687,37 @@ class Resolver:
                 f"no datasource found along lightning.datasource.{'.'.join(rest)}")
         ds, residual = hit
         unit = load_catalog_unit(ds)
-        if prune is not None and tt is None:
-            from lightning_metastore_spark.catalog.units import (
-                DeltaCatalogUnit,
-                IcebergCatalogUnit,
-            )
-            if isinstance(unit, (DeltaCatalogUnit, IcebergCatalogUnit)):
-                return unit.load_table(self.spark, residual,
-                                       prune=prune)
-        if tt is None:
-            if ds.is_file:
-                key = (ds.name, tuple(ds.namespace), tuple(residual),
-                       tuple(sorted(ds.options.items())))
-                try:
-                    path = unit._resolve_path(residual)
-                except Exception:
-                    path = None
-                if path is not None:
-                    fp = _path_fingerprint(path)
-                    cached = self._file_df_cache.get(key)
-                    if fp is not None and cached is not None \
-                            and cached[0] == fp:
-                        return cached[1]
-                    df = unit.load_table(self.spark, residual)
-                    if fp is not None:
-                        if len(self._file_df_cache) >= 256:
-                            self._file_df_cache.pop(
-                                next(iter(self._file_df_cache)))
-                        self._file_df_cache[key] = (fp, df)
-                    return df
+        lakehouse = isinstance(unit, (DeltaCatalogUnit, IcebergCatalogUnit))
+        if tt is not None:
+            if not lakehouse:
+                raise ResolutionError(
+                    f"{ds.source_type} datasource "
+                    f"lightning.datasource.{'.'.join(rest)} does not support "
+                    "time travel (VERSION/TIMESTAMP AS OF)")
+            kind, value = tt
+            return unit.load_table(self.spark, residual,
+                                   **{f"{kind}_as_of": value})
+        if prune is not None and lakehouse:
+            return unit.load_table(self.spark, residual, prune=prune)
+        try:
+            path = unit._resolve_path(residual) if ds.is_file else None
+        except Exception:
+            path = None
+        fp = None if path is None else _path_fingerprint(path)
+        if fp is None:
             return unit.load_table(self.spark, residual)
-        from lightning_metastore_spark.catalog.units import (
-            DeltaCatalogUnit,
-            IcebergCatalogUnit,
-        )
-        if not isinstance(unit, (DeltaCatalogUnit, IcebergCatalogUnit)):
-            raise ResolutionError(
-                f"{ds.source_type} datasource "
-                f"lightning.datasource.{'.'.join(rest)} does not support "
-                "time travel (VERSION/TIMESTAMP AS OF)")
-        kind, value = tt
-        kwargs = ({"version_as_of": value} if kind == "version"
-                  else {"timestamp_as_of": value})
-        return unit.load_table(self.spark, residual, **kwargs)
+        key = (ds.name, tuple(ds.namespace), tuple(residual),
+               tuple(sorted(ds.options.items())))
+        with self._file_df_lock:
+            cached = self._file_df_cache.get(key)
+        if cached is not None and cached[0] == fp:
+            return cached[1]
+        df = unit.load_table(self.spark, residual)
+        with self._file_df_lock:
+            if len(self._file_df_cache) >= 256:
+                self._file_df_cache.pop(next(iter(self._file_df_cache)))
+            self._file_df_cache[key] = (fp, df)
+        return df
 
     # -- metastore root -----------------------------------------------------
 
@@ -746,7 +744,9 @@ class Resolver:
         `LightningCatalogUnit.loadTable` with schema copy (SURVEY §2.4).
 
         Statistics: when REGISTER CATALOG analyzed the table, its row
-        count x a type-derived row width estimates the table size; a
+        count x Spark's own row-size estimate (8 bytes + each column's
+        `defaultSize`, as `EstimationUtils.getSizePerRow`) gives the
+        table size; a
         table under spark.sql.autoBroadcastJoinThreshold gets a
         broadcast hint. This matters most for JDBC snapshots — Spark
         prices an unknown JDBC relation at defaultSizeInBytes (huge), so
@@ -769,9 +769,9 @@ class Resolver:
             cols.append(F.col(f_.name).cast(f_.dataType))
         out = df.select(*cols)
         if t.row_count is not None:
-            est = t.row_count * _est_row_width(schema)
-            thr = _parse_size_bytes(self.spark.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"))
+            est = t.row_count * (8 + out._jdf.schema().defaultSize())
+            thr = (self.spark._jsparkSession.sessionState().conf()
+                   .autoBroadcastJoinThreshold())
             if 0 < thr and est <= thr:
                 out = out.hint("broadcast")
         return out
@@ -792,8 +792,7 @@ class Resolver:
             # same error contract as USLTable.scala:47-52
             raise ResolutionError(
                 f"USL table {table} is not activated (ACTIVATE USL TABLE first)")
-        rewritten = self.resolve_sql(query, _stack | {key})
-        df = self.spark.sql(rewritten)
+        df = self.resolve_sql(query, _stack | {key})
         return self._enforce_access(df, spec, ns + [usl.name, table])
 
     def _enforce_access(self, df: DataFrame, spec: dict, path: list[str]):

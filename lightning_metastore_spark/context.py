@@ -8,8 +8,10 @@ analogue of installing the reference's session extension +
     ctx.sql("SELECT * FROM lightning.datasource.file.tpch.orders").show()
 
 `sql()` dispatches: Lightning DDL -> command layer (driver-side metadata
-ops); anything else -> resolver rewrite -> `spark.sql()` (Catalyst owns
-planning/execution end to end — EP2 in SURVEY.md §3).
+ops); anything else -> the resolver, which parses the statement, loads
+its `lightning.*` relations and hands them to `spark.sql()` as
+per-statement DataFrames (Catalyst owns planning/execution end to end —
+EP2 in SURVEY.md §3).
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ class LightningContext:
             pushed = self.resolver.try_single_jdbc_pushdown(query)
             if pushed is not None:
                 return pushed
-        return self.spark.sql(self.resolver.resolve_sql(query))
+        return self.resolver.resolve_sql(query)
 
     def table(self, name: str) -> DataFrame:
         """Load a lightning.* table directly (DataFrame API path)."""

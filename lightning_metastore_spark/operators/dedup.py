@@ -988,17 +988,6 @@ def dedup_keep(docs: DataFrame, pairs: DataFrame | None = None,
 # Embedding cosine near-dup (brute-force baseline; scale path = similarity.py)
 # ---------------------------------------------------------------------------
 
-def cosine_expr(a, b):
-    """Cosine similarity between two array<double> columns, JVM-side."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
-
-
 def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.45,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding") -> DataFrame:

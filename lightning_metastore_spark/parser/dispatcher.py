@@ -396,7 +396,7 @@ class InsertInto(Command):
             raise CommandParseError(
                 f"no datasource at lightning.{'.'.join(self.path)}")
         ds, residual = hit
-        df = ctx.spark.sql(ctx.resolver.resolve_sql(self.query))
+        df = ctx.resolver.resolve_sql(self.query)
         if self.overwrite:
             # INSERT OVERWRITE t SELECT ... FROM t would otherwise read
             # and truncate the same files; materialize the SELECT first
@@ -928,7 +928,7 @@ class CreateTableAsSelect(Command):
                 return self._df(ctx, [(".".join(self.path),)], "created string")
             raise CommandParseError(
                 f"table already exists: lightning.{'.'.join(self.path)}")
-        df = ctx.spark.sql(ctx.resolver.resolve_sql(self.query))
+        df = ctx.resolver.resolve_sql(self.query)
         unit.write_table(df, residual, mode="errorifexists")
         return self._df(ctx, [(".".join(self.path),)], "created string")
 
@@ -1003,7 +1003,7 @@ class MergeInto(Command):
         if re.match(r"^lightning\.", src, re.I):
             s_base = ctx.resolver.load_table(_split_path(src))
         else:
-            s_base = ctx.spark.sql(ctx.resolver.resolve_sql(src))
+            s_base = ctx.resolver.resolve_sql(src)
 
         # lakehouse targets: file-granular copy-on-write merge
         from lightning_metastore_spark.catalog.units import (
@@ -1377,7 +1377,7 @@ class ActivateUSLTable(Command):
                      if s["name"].lower() == table.lower()), None)
         if spec is None:
             raise CommandParseError(f"USL {usl_name} has no table {table}")
-        analyzed = ctx.spark.sql(ctx.resolver.resolve_sql(self.query))
+        analyzed = ctx.resolver.resolve_sql(self.query)
         declared = spec.columns
         if len(analyzed.schema) != len(declared):
             raise CommandParseError(
@@ -1512,6 +1512,7 @@ class RunDQ(Command):
     def run(self, ctx) -> DataFrame:
         from functools import reduce
 
+        from lightning_metastore_spark.catalog.resolver import escape_braces
         from lightning_metastore_spark.operators import dq as dq_ops
 
         ns, usl, spec_d, table = _usl_for_table(ctx, self.table_path)
@@ -1547,20 +1548,22 @@ class RunDQ(Command):
                 continue
             cte_defs = {k: v for k, v in ann["args"].items()
                         if k not in ("name", "expression")}
-            view = f"__dq_{dq_name}"
-            df.createOrReplaceTempView(view)
+            # each CTE body resolves to a DataFrame; the checked table
+            # and the CTEs reach spark.sql as {placeholders}, so no
+            # named view is registered
+            dfs = {"rows": df}
+            ctes = []
+            for i, (k, v) in enumerate(cte_defs.items()):
+                dfs[f"c{i}"] = ctx.resolver.resolve_sql(v)
+                ctes.append(f"{escape_braces(k)} AS (SELECT * FROM {{c{i}}})")
+            prefix = f"WITH {', '.join(ctes)} " if ctes else ""
             # ${var} becomes a subquery over its CTE (scalar or IN-list)
-            expr_sub = re.sub(r"\$\{(\w+)\}", r"(SELECT * FROM \1)", expr)
-            prefix = ""
-            if cte_defs:
-                ctes = ", ".join(
-                    f"{k} AS ({ctx.resolver.resolve_sql(v)})"
-                    for k, v in cte_defs.items())
-                prefix = f"WITH {ctes} "
+            expr_sub = re.sub(r"\$\{\{(\w+)\}\}", r"(SELECT * FROM \1)",
+                              escape_braces(expr))
             stats = ctx.spark.sql(
                 f"{prefix}SELECT COUNT(*) AS total, "
                 f"CAST(SUM(CASE WHEN {expr_sub} THEN 1 ELSE 0 END) AS BIGINT)"
-                f" AS valid FROM {view}")
+                f" AS valid FROM {{rows}}", **dfs)
             results.append(stats.selectExpr(
                 f"'{dq_name}' AS dq_name", f"'{table}' AS table_name",
                 "'Custom Data Quality' AS check_type",

@@ -1072,11 +1072,6 @@ ORDER BY method, query_id, rk
 
 # --- text analysis ---------------------------------------------------------
 
-def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ("documents",))
-    return text_fns.token_counts(t["documents"]).orderBy("doc_id")
-
-
 TOKEN_COUNTS_ORACLE = r"""
 SELECT doc_id,
        CAST(LENGTH(text) AS INT) AS n_chars,
@@ -1700,11 +1695,6 @@ GROUP BY doc_id
     "{HEXC3}", _hexint_sql("hc", 3))
 
 
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ("documents",))
-    return text_fns.fingerprint(t["documents"]).orderBy("doc_id")
-
-
 FINGERPRINT_ORACLE = r"""
 SELECT doc_id, md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
 FROM documents ORDER BY doc_id
@@ -2136,26 +2126,6 @@ def _hourly_stream(spark: SparkSession, sf_dir: str):
     return agg, "gate_stream_hourly"
 
 
-def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming windowed aggregation drained to completion;
-    the oracle is the BATCH SQL — passing proves the incremental
-    computation converges to the batch answer."""
-    import os
-
-    from lightning_metastore_spark.streaming import events as sev
-
-    agg, name = _hourly_stream(spark, sf_dir)
-    ev_bytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    # complete mode: the memory sink holds exactly the final aggregation
-    # state (update mode would append one row per key per trigger)
-    with _stream_conf(spark, _stream_partitions(spark, ev_bytes)):
-        sev.run_to_memory(agg, name, output_mode="complete")
-    return spark.sql(f"""
-        SELECT window_start, event_type, n_events, sum_value
-        FROM {name} ORDER BY window_start, event_type
-    """)
-
-
 STREAM_HOURLY_ORACLE = """
 SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
        event_type, COUNT(*) AS n_events,
@@ -2402,18 +2372,6 @@ def _dedup_stream(spark: SparkSession, sf_dir: str):
                .groupBy("event_type")
                .agg(F.count(F.lit(1)).alias("n_unique")))
     return deduped, "gate_stream_dedup"
-
-
-def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming deduplication: watermarked dropDuplicates on event_id
-    over a duplicated input stream (every event fed twice); the oracle
-    is the batch distinct — exactly-once semantics through the gate."""
-    from lightning_metastore_spark.streaming import events as sev
-
-    deduped, name = _dedup_stream(spark, sf_dir)
-    sev.run_to_memory(deduped, name, output_mode="complete")
-    return spark.sql(f"SELECT event_type, n_unique FROM {name} "
-                     f"ORDER BY event_type")
 
 
 STREAM_DEDUP_ORACLE = """

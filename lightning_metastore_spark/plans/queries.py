@@ -302,19 +302,6 @@ ORDER BY o_custkey, rk
 """
 
 
-def q_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ROLLUP over two dims — partial-agg friendly; Spark plans
-    a single Expand + hash agg (no repeated scans)."""
-    t = load_tables(spark, sf_dir, ("orders",))
-    return (
-        t["orders"]
-        .rollup("o_orderpriority", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_orders"),
-             (F.sum(cents(F.col("o_totalprice"))) / 100.0).alias("total_price"))
-        .orderBy(F.asc_nulls_first("o_orderpriority"), F.asc_nulls_first("o_orderstatus"))
-    )
-
-
 Q_ROLLUP_ORACLE = f"""
 SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n_orders,
        SUM({_cents_sql('o_totalprice')}) / 100.0 AS total_price
@@ -398,51 +385,6 @@ EXCEPT
 SELECT c_custkey FROM customer JOIN orders ON c_custkey = o_custkey
 WHERE o_orderstatus = 'F'
 ORDER BY c_custkey
-"""
-
-
-def q_setops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag-semantics set operators (INTERSECT ALL / EXCEPT ALL) —
-    multiplicity-preserving, unlike q_setops_segments' distinct forms."""
-    load_tables(spark, sf_dir, ("lineitem",))
-    return spark.sql("""
-        SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-        INTERSECT ALL
-        SELECT l_suppkey FROM lineitem WHERE l_linestatus = 'O'
-        EXCEPT ALL
-        SELECT l_suppkey FROM lineitem WHERE l_quantity > 45
-        ORDER BY l_suppkey
-    """)
-
-
-Q_SETOPS_ALL_ORACLE = """
-SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-INTERSECT ALL
-SELECT l_suppkey FROM lineitem WHERE l_linestatus = 'O'
-EXCEPT ALL
-SELECT l_suppkey FROM lineitem WHERE l_quantity > 45
-ORDER BY l_suppkey
-"""
-
-
-def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY CUBE — all 2^n grouping combinations in one Expand pass
-    (completes the rollup / grouping-sets / cube trio)."""
-    t = load_tables(spark, sf_dir, ("lineitem",))
-    return (t["lineitem"]
-            .cube("l_returnflag", "l_linestatus")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 (F.sum(cents(F.col("l_extendedprice"))) / 100.0).alias("total"))
-            .orderBy(F.asc_nulls_first("l_returnflag"),
-                     F.asc_nulls_first("l_linestatus")))
-
-
-Q_CUBE_ORACLE = f"""
-SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-       CAST(SUM({_cents_sql('l_extendedprice')}) AS DOUBLE) / 100 AS total
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """
 
 
@@ -1035,41 +977,6 @@ ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST
 """
 
 
-def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's NATIVE session_window (30-min gap) — the oracle is the
-    classic lag+cumsum SQL formulation, so this cross-checks Spark's
-    built-in session semantics against the portable definition."""
-    t = load_tables(spark, sf_dir, ("events",))
-    return (t["events"]
-            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select("user_id",
-                    F.col("session_window.start").alias("session_start"),
-                    "n_events")
-            .orderBy("user_id", "session_start"))
-
-
-Q_SESSION_WINDOW_ORACLE = """
-WITH ev AS (
-  SELECT user_id, event_id, ts, epoch_us(ts) AS us FROM events
-), flagged AS (
-  SELECT user_id, ts, us, event_id,
-         CASE WHEN LAG(us) OVER w IS NULL OR us - LAG(us) OVER w > 30 * 60 * 1000000
-              THEN 1 ELSE 0 END AS new_session
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-), sessions AS (
-  SELECT user_id, ts,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-)
-SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events
-FROM sessions GROUP BY user_id, session_id
-ORDER BY user_id, session_start
-"""
-
-
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-set aggregates: exact interpolated percentiles per group
     (percentile_cont — deterministic given identical input doubles)."""
@@ -1099,58 +1006,6 @@ SELECT o_orderstatus,
 FROM orders
 GROUP BY o_orderstatus
 ORDER BY o_orderstatus
-"""
-
-
-def q_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE window frame: events in the trailing hour per user (numeric
-    range over epoch micros — engine-portable frame semantics)."""
-    load_tables(spark, sf_dir, ("events",))
-    return spark.sql("""
-        SELECT event_id, user_id,
-               COUNT(*) OVER (PARTITION BY user_id ORDER BY unix_micros(ts)
-                              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-                 AS n_last_hour
-        FROM events
-        ORDER BY event_id
-    """)
-
-
-Q_RANGE_WINDOW_ORACLE = """
-SELECT event_id, user_id,
-       COUNT(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                      RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-         AS n_last_hour
-FROM events
-ORDER BY event_id
-"""
-
-
-def q_window_navigation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Navigation window functions: first/last/lead/lag + ntile over
-    per-customer order sequences."""
-    load_tables(spark, sf_dir, ("orders",))
-    return spark.sql("""
-        SELECT o_custkey, o_orderkey,
-               FIRST_VALUE(o_orderkey) OVER w AS first_order,
-               LAG(o_orderkey) OVER w AS prev_order,
-               LEAD(o_orderkey) OVER w AS next_order,
-               NTILE(4) OVER w AS quartile
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        ORDER BY o_custkey, o_orderkey
-    """)
-
-
-Q_WINDOW_NAV_ORACLE = """
-SELECT o_custkey, o_orderkey,
-       FIRST_VALUE(o_orderkey) OVER w AS first_order,
-       LAG(o_orderkey) OVER w AS prev_order,
-       LEAD(o_orderkey) OVER w AS next_order,
-       NTILE(4) OVER w AS quartile
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-ORDER BY o_custkey, o_orderkey
 """
 
 

@@ -238,20 +238,6 @@ def matched_clause_idx(matched_clauses: list,
     return F.lit(-1) if out is None else out.otherwise(F.lit(-1))
 
 
-def any_matched_applies(matched_clauses: list,
-                        matched: Column) -> Column:
-    """True when SOME matched clause claims this row — the
-    touched-file discovery predicate (rows no clause claims leave
-    their file byte-identical, so the file need not rewrite)."""
-    if not matched_clauses:
-        return F.lit(False)
-    out = None
-    for cond, _kind, _sets in matched_clauses:
-        c = matched if cond is None else (matched & F.expr(cond))
-        out = c if out is None else (out | c)
-    return out
-
-
 def delete_idxs(matched_clauses: list) -> list[int]:
     return [i for i, (_c, kind, _s) in enumerate(matched_clauses)
             if kind == "delete"]

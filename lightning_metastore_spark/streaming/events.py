@@ -328,27 +328,6 @@ def consume_iceberg_changes(spark: SparkSession, src_path: str,
     return int(n_snaps)
 
 
-def start_cdf_pump(spark: SparkSession, src_path: str, sink_path: str,
-                   checkpoint: str,
-                   app_id: str = "lightning-cdf-consumer",
-                   interval: str = "1 second"):
-    """Continuous CDF consumption: a rate-source micro-batch tick
-    drives `consume_table_changes` on every trigger. Exactly-once
-    rides the SINK's SetTransaction (not the tick stream's
-    checkpoint), so restarts, replays, and even concurrent pumps with
-    the same app_id never duplicate a commit's changes. Returns the
-    StreamingQuery handle; the caller owns stop()."""
-    tick = (spark.readStream.format("rate")
-            .option("rowsPerSecond", 1).load())
-
-    def _pump(_batch_df: DataFrame, _batch_id: int) -> None:
-        consume_table_changes(spark, src_path, sink_path, app_id)
-
-    return (tick.writeStream.foreachBatch(_pump)
-            .trigger(processingTime=interval)
-            .option("checkpointLocation", checkpoint).start())
-
-
 def start_memory_stream(stream_df: DataFrame, query_name: str,
                         output_mode: str = "update"):
     """Start (without draining) a memory-sink query; returns the handle.

@@ -248,3 +248,77 @@ def test_api_pipeline_options_sweep_every_op(server):
         assert "declared options" in body, (op, body[:200])
         for name in declared:
             assert name in body, (op, name, body[:300])
+
+
+def test_api_concurrent_clients(spark, tmp_path):
+    """Four client threads share one server: routed SELECTs over two
+    sources (and a join across them), a USL select, and REGISTER OR
+    REPLACE of a third datasource that the other threads read while
+    it is replaced. Every response must match its known count."""
+    import threading
+
+    nums = tmp_path / "nums"
+    spark.range(0, 30).selectExpr("id", "id % 3 AS g") \
+        .write.parquet(str(nums / "nums.parquet"))
+    ctx = LightningContext(spark, warehouse=str(tmp_path / "model"))
+    ns = "NAMESPACE lightning.datasource.file"
+    ctx.sql("CREATE NAMESPACE lightning.datasource.file")
+    ctx.sql(f"REGISTER PARQUET DATASOURCE tpch OPTIONS(path '{SF_DIR}') {ns}")
+    ctx.sql(f"REGISTER PARQUET DATASOURCE nums OPTIONS(path '{nums}') {ns}")
+    register_third = (f"REGISTER OR REPLACE PARQUET DATASOURCE third "
+                      f"OPTIONS(path '{nums}') {ns}")
+    ctx.sql(register_third)
+    ctx.sql("CREATE NAMESPACE lightning.metastore.cc")
+    ctx.sql("COMPILE USL m DEPLOY NAMESPACE lightning.metastore.cc "
+            "DDL create table o (o_orderkey BIGINT primary key, "
+            "o_totalprice double)")
+    ctx.sql("ACTIVATE USL TABLE lightning.metastore.cc.m.o AS "
+            "SELECT o_orderkey, o_totalprice FROM "
+            "lightning.datasource.file.tpch.orders")
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").count()
+    joined = spark.read.parquet(f"{SF_DIR}/customer.parquet") \
+        .where("c_custkey < 30").count()
+    src = "lightning.datasource.file"
+    expected = {
+        f"SELECT count(*) AS n FROM {src}.tpch.orders": orders,
+        f"SELECT count(*) AS n FROM {src}.tpch.customer c "
+        f"JOIN {src}.nums.nums x ON c.c_custkey = x.id": joined,
+        "SELECT count(*) AS n FROM lightning.metastore.cc.m.o": orders,
+        f"SELECT count(*) AS n FROM {src}.third.nums": 30,
+        register_third: None,
+    }
+    stmts = list(expected)
+    srv = LightningAPIServer(ctx).start()
+    start = threading.Barrier(4)
+    got, errors = [], []
+
+    def client(k):
+        start.wait()
+        for i in range(2 * len(stmts)):
+            q = stmts[(k + i) % len(stmts)]
+            try:
+                got.append((q, _post_q(srv, q)))
+            except Exception as e:  # noqa: BLE001 — reported below
+                errors.append((q, repr(e)))
+
+    threads = [threading.Thread(target=client, args=(k,)) for k in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)  # interleave the threads more finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+        srv.stop()
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(got) == 4 * 2 * len(stmts)
+    for q, (status, rows) in got:
+        assert status == 200, q
+        if expected[q] is None:
+            assert len(rows) == 1, q
+        else:
+            assert rows == [{"n": expected[q]}], q

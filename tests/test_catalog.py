@@ -26,7 +26,7 @@ def ctx(spark, tmp_path):
     return LightningContext(spark, warehouse=str(tmp_path / "model"))
 
 
-def test_register_parquet_datasource_and_query(ctx):
+def test_register_parquet_datasource_and_query(ctx, spark):
     ctx.sql("CREATE NAMESPACE lightning.datasource.file")
     ctx.sql(f"REGISTER PARQUET DATASOURCE tpch OPTIONS(path '{SF_DIR}') "
             f"NAMESPACE lightning.datasource.file")
@@ -36,6 +36,34 @@ def test_register_parquet_datasource_and_query(ctx):
         GROUP BY o_orderpriority ORDER BY o_orderpriority
     """).collect()
     assert len(out) == 5 and all(r.n > 0 for r in out)
+
+    # names are found by Spark's parser: a chain in a comment or a
+    # string (even one with a backslash escape) is text, not a table
+    for q in ("SELECT 1 AS x -- see lightning.datasource.nope.t",
+              "SELECT 1 AS x /* lightning.datasource.nope.t */",
+              "SELECT 'it\\'s lightning.datasource.nope.t' AS x"):
+        assert len(ctx.sql(q).collect()) == 1
+    n = spark.read.parquet(f"{SF_DIR}/orders.parquet").count()
+    # a backticked chain is the same table
+    assert ctx.sql("SELECT count(*) AS n FROM `lightning`.`datasource`"
+                   ".`file`.`tpch`.`orders`").collect()[0].n == n
+    t = "lightning.datasource.file.tpch.orders"
+    # relations in a WHERE subquery and in a CTE body resolve
+    assert ctx.sql(f"SELECT count(*) AS n FROM {t} WHERE o_custkey IN "
+                   f"(SELECT o_custkey FROM {t})").collect()[0].n == n
+    assert ctx.sql(f"WITH o AS (SELECT * FROM {t}) "
+                   "SELECT count(*) AS n FROM o").collect()[0].n == n
+    plan = ctx.sql(f"EXPLAIN SELECT * FROM {t}").collect()[0][0]
+    assert "orders.parquet" in plan
+    # a temp view keeps working after the statement that made it
+    ctx.sql(f"CREATE OR REPLACE TEMP VIEW v_orders AS SELECT * FROM {t}")
+    assert ctx.sql("SELECT count(*) AS n FROM v_orders"
+                   ).collect()[0].n == n
+    spark.catalog.dropTempView("v_orders")
+    # resolution leaves no view behind in the session catalog
+    left = [v.name for v in spark.catalog.listTables()
+            if v.name.startswith(("l_", "_pyspark_"))]
+    assert left == []
 
 
 def test_register_requires_namespace_root(ctx):
@@ -265,6 +293,15 @@ def test_unknown_trailing_segment_good_error(ctx):
             f"NAMESPACE lightning.datasource.file")
     with pytest.raises(Exception, match="no parquet data|neither a table"):
         ctx.sql("SELECT * FROM lightning.datasource.file.tpch.nope").collect()
+    # a hyphenated datasource name resolves when backticked; unquoted,
+    # Spark's parser rejects it, as it would in the reference
+    ctx.sql(f"REGISTER PARQUET DATASOURCE my-src OPTIONS(path '{SF_DIR}') "
+            f"NAMESPACE lightning.datasource.file")
+    assert ctx.sql("SELECT count(*) AS n FROM "
+                   "lightning.datasource.file.`my-src`.region"
+                   ).collect()[0].n == 5
+    with pytest.raises(Exception, match="INVALID_IDENTIFIER"):
+        ctx.sql("SELECT * FROM lightning.datasource.file.my-src.region")
 
 
 def test_insert_into_and_ctas(ctx, spark, tmp_path):

@@ -3494,6 +3494,7 @@ def test_resolver_prune_wiring(spark, tmp_path):
     joins/subqueries/ORs stay unpruned and results are unchanged."""
     from lightning_metastore_spark.catalog.resolver import (
         extract_prune_conjuncts,
+        simple_where_conjuncts,
     )
     from lightning_metastore_spark.context import LightningContext
     from lightning_metastore_spark.sources.iceberg_writer import (
@@ -3578,6 +3579,19 @@ def test_resolver_prune_wiring(spark, tmp_path):
     dfb = ctx.sql(f"SELECT id FROM {t} WHERE id BETWEEN 12 AND 17")
     assert len(dfb.inputFiles()) == 1
     assert sorted(r.id for r in dfb.collect()) == list(range(12, 18))
+
+    # a commented-out conjunct is no hint: every row comes back
+    for q in (f"SELECT id FROM {t} WHERE v >= 0 -- AND id >= 35",
+              f"SELECT id FROM {t} WHERE v >= 0 -- AND id >= 35\n",
+              f"SELECT id FROM {t} WHERE v >= 0 /* AND id >= 35 */"):
+        assert ctx.sql(q).count() == 40
+    # nor is an AND hidden in a string with a backslash escape: this
+    # predicate is `s <> <one literal>`, true on every row of 4 files
+    pred = "s <> 'a\\' AND id >= 35 AND s <> \\'b'"
+    assert simple_where_conjuncts(pred) == []
+    assert ctx.sql(f"DELETE FROM {t} WHERE {pred}").collect()[0] \
+        .n_deleted == 40
+    assert ctx.sql(f"SELECT count(*) AS n FROM {t}").collect()[0].n == 0
 
 
 def test_prune_date_literal_vs_string_column(spark, tmp_path):
