@@ -9,16 +9,20 @@ Row encoding mirrors `rowToJson` (:187-254): binary -> base64,
 timestamps/dates ISO-formatted, struct -> object, map<string,_> ->
 object, arrays -> lists.
 
-Implementation: stdlib http.server (no web framework in the container)
-+ `df.toLocalIterator()` so only one partition is resident on the
-driver at a time — the reference makes the same choice to avoid OOM
-(comment at `DataQualitySpec.scala:612`).
+Implementation: stdlib http.server (no web framework in the container).
+A query's rows stream through `df.toLocalIterator()`, so only one
+partition is resident on the driver at a time — the reference makes the
+same choice to avoid OOM (comment at `DataQualitySpec.scala:612`). A
+local result (a command's own rows, built on the driver as a
+`LocalRelation`) is collected instead: its rows are already on the
+driver, and collecting them runs no Spark job.
 
 Hardening beyond the reference:
 - content negotiation: requests must be application/json; responses are
   a JSON array (default) or NDJSON when `Accept: application/x-ndjson`.
 - `max_rows` server cap (applied as `df.limit` — reaches the PLAN as
-  CollectLimit, not a post-hoc truncation) and `query_timeout_sec`
+  CollectLimit, not a post-hoc truncation; a local result is sliced)
+  and `query_timeout_sec`
   enforced by cancelling jobs carrying the request's job tag.
 - a mid-stream Spark failure emits a WELL-FORMED error trailer — the
   final array element / NDJSON line is `{"__error__": msg}` — instead
@@ -56,11 +60,20 @@ def encode_value(v):
     return v
 
 
-def rows_from_df(df):
-    """Row iterator for streaming. Pulling the FIRST row eagerly (in
-    _respond_df) forces execution of the first partition before any HTTP
-    status line is sent, so runtime errors (not just analysis errors)
-    still produce a clean 400."""
+def rows_from_df(df, max_rows: int | None = None):
+    """Row iterator for streaming, capped at ``max_rows``. Pulling the
+    FIRST row eagerly (in _respond_df) forces execution of the first
+    partition before any HTTP status line is sent, so runtime errors
+    (not just analysis errors) still produce a clean 400.
+
+    A local result (a command's rows, a `LocalRelation`) is already on
+    the driver: it is collected without a job and capped by slicing,
+    where `toLocalIterator` would run one job per partition. Any other
+    plan is capped by `df.limit` (a CollectLimit) and streamed."""
+    if df.isLocal():
+        return iter(df.collect()[:max_rows])
+    if max_rows is not None:
+        df = df.limit(max_rows)
     return df.toLocalIterator()
 
 
@@ -69,9 +82,10 @@ class LightningAPIServer:
 
     ``max_rows`` caps every /api/q result via ``df.limit`` (visible in
     the plan as CollectLimit — the scan stops early, nothing is
-    computed past the cap). ``query_timeout_sec`` cancels the jobs
-    carrying the request's job tag after the deadline: before the first
-    row that is a clean 408; mid-stream it becomes the error trailer.
+    computed past the cap); a local result is sliced.
+    ``query_timeout_sec`` cancels the jobs carrying the request's job
+    tag after the deadline: before the first row that is a clean 408;
+    mid-stream it becomes the error trailer.
     """
 
     def __init__(self, ctx, host: str = "127.0.0.1", port: int = 0,
@@ -131,11 +145,9 @@ class LightningAPIServer:
                                     pass
 
                     threading.Thread(target=_enforce, daemon=True).start()
-                if outer.max_rows is not None:
-                    df = df.limit(outer.max_rows)
                 try:
                     try:
-                        rows = rows_from_df(df)
+                        rows = rows_from_df(df, outer.max_rows)
                         first = next(rows, sentinel)
                     except Exception as e:
                         msg = str(e)[:500]

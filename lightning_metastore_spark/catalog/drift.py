@@ -21,6 +21,8 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from lightning_metastore_spark.session import local_frame
+
 DRIFT_SCHEMA = ("table string, column string, change string, "
                 "stored_type string, current_type string, "
                 "upcast_ok boolean")
@@ -71,4 +73,4 @@ def schema_drift(ctx, ns: list[str]) -> DataFrame:
         for col, dt in cur.items():
             if col not in old:
                 rows.append((name, col, "added", None, dt, True))
-    return ctx.spark.createDataFrame(rows, schema=DRIFT_SCHEMA)
+    return local_frame(ctx.spark, rows, DRIFT_SCHEMA)

@@ -7,11 +7,12 @@ catalog's part around the analyzer: it parses the statement with
 Spark's parser, resolves every relation named `lightning.*` (in
 subqueries, CTE bodies, `VERSION`/`TIMESTAMP AS OF` and `EXPLAIN` too)
 to a DataFrame via the metastore + catalog units, and splices a `{tN}`
-placeholder in at the relation's offsets. `spark.sql(template,
-**dataframes)` then analyses the statement; PySpark's `_pyspark_<uuid>`
-views exist only while it does. Comments, strings and backticks are the
-parser's business; like any Spark identifier, a hyphenated name must be
-backticked (`` lightning.datasource.file.`my-src`.t ``).
+placeholder in at the relation's offsets. `sql_with_views(spark,
+template, **dataframes)` then analyses the statement; its per-statement
+views exist only while it does, and dropping them uncaches nothing.
+Comments, strings and backticks are the parser's business; like any
+Spark identifier, a hyphenated name must be backticked
+(`` lightning.datasource.file.`my-src`.t ``).
 
 USL tables re-enter resolution with their activation SQL (the reference
 nests `context.sql(...)` inside the scan, `usl/USLTableScan.scala:48-51`);
@@ -39,6 +40,7 @@ from lightning_metastore_spark.model.metastore import (
     DATASOURCE_ROOT,
     METASTORE_ROOT,
 )
+from lightning_metastore_spark.session import sql_with_views
 
 # a `lightning.datasource|metastore...` chain, for the hint extraction
 _CHAIN = re.compile(
@@ -436,7 +438,7 @@ def _parts(scala_seq) -> tuple:
 
 
 def escape_braces(text: str) -> str:
-    """Literal text of a `spark.sql(template, **kwargs)` template."""
+    """Literal text of a `sql_with_views` template."""
     return text.replace("{", "{{").replace("}", "}}")
 
 
@@ -538,7 +540,7 @@ class Resolver:
     def resolve_sql(self, sql: str,
                     _stack: frozenset = frozenset()) -> DataFrame:
         """Analyse ``sql`` with every lightning.* relation resolved to
-        a `{tN}` placeholder of `spark.sql(template, **dataframes)`.
+        a `{tN}` placeholder of `sql_with_views(spark, template, **dfs)`.
         Simple WHERE conjuncts of plain (possibly joined) relations
         reach the Delta/Iceberg units as file-skipping hints
         (`extract_prune_conjuncts` documents the soundness guards);
@@ -572,7 +574,7 @@ class Resolver:
         if len(_MENTION.findall(sql)) > len(rels):
             by_parts = {k[0]: v for k, v in placeholder.items()}
             edits += self._chain_column_edits(plan, by_parts)
-        return self.spark.sql(_splice(sql, edits), **dfs)
+        return sql_with_views(self.spark, _splice(sql, edits), **dfs)
 
     def load_table(self, path: list[str],
                    _stack: frozenset = frozenset(),

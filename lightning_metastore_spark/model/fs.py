@@ -43,6 +43,7 @@ import os
 import posixpath
 import shutil
 import threading
+import uuid
 from typing import Iterator
 from urllib.parse import urlsplit
 
@@ -119,11 +120,21 @@ class LocalFileSystem(FileSystem):
             return fh.read()
 
     def write_bytes(self, path: str, data: bytes) -> None:
+        # written beside the target, then renamed over it: a concurrent
+        # reader sees the old bytes or the new, never a truncated file.
+        # The dot-name ending ".tmp" matches no metastore listing.
         parent = os.path.dirname(path)
         if parent:
             os.makedirs(parent, exist_ok=True)
-        with open(path, "wb") as fh:
-            fh.write(data)
+        tmp = os.path.join(
+            parent, f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp")
+        try:
+            with open(tmp, "xb") as fh:
+                fh.write(data)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def exists(self, path: str) -> bool:
         return os.path.exists(path)

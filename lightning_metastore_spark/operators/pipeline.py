@@ -32,6 +32,7 @@ from pyspark.sql.window import Window as W
 from lightning_metastore_spark.functions import text as text_fns
 from lightning_metastore_spark.operators import dedup
 from lightning_metastore_spark.operators.cleaning import remove_boilerplate_lines
+from lightning_metastore_spark.session import local_frame
 
 
 @dataclass
@@ -428,8 +429,8 @@ def corpus_report(docs: DataFrame, top_langs: int = 10,
         ("avg_quality_score", float(qual["avg_q"] or 0), None),
     ] + [(f"lang:{r['pred_lang']}", round(r["n"] / n_docs, 6),
           r["pred_lang"]) for r in langs]
-    return docs.sparkSession.createDataFrame(
-        rows, "metric string, value_num double, value_str string")
+    return local_frame(docs.sparkSession, rows,
+                       "metric string, value_num double, value_str string")
 
 
 def corpus_diff(old: DataFrame, new: DataFrame,
@@ -562,5 +563,5 @@ def corpus_drift(old: DataFrame, new: DataFrame, top_k: int = 10,
         ("vocab_union", float(v), None),
     ] + [(f"drift:{r['token']}", float(r["delta"]), r["token"])
          for r in top]
-    return spark.createDataFrame(
-        rows, "metric string, value_num double, value_str string")
+    return local_frame(spark, rows,
+                       "metric string, value_num double, value_str string")

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from lightning_metastore_spark.session import sql_with_views
+
 
 def asof_join(left: DataFrame, right: DataFrame,
               ts_col: str = "ts", by: Sequence[str] = ("user_id",),
@@ -153,12 +155,13 @@ def hypertable_rollup(events: DataFrame, ts_col: str = "ts",
           for r in resolutions])
     bucket_cols = ", ".join(f"b_{r}" for r in resolutions)
     sets = ", ".join(f"(key, b_{r})" for r in resolutions)
-    buckets.createOrReplaceTempView("__rollup_in")
     res_case = " ".join(
         f"WHEN b_{r} IS NOT NULL THEN '{r}'" for r in resolutions)
-    # exact cents accumulation: engine-portable money math (see
+    # the input binds per statement: a fixed-name session view would be
+    # shared by concurrent callers (and replace a user's own view).
+    # Exact cents accumulation: engine-portable money math (see
     # plans/queries.py float-determinism note)
-    return buckets.sparkSession.sql(f"""
+    return sql_with_views(buckets.sparkSession, f"""
         SELECT CASE {res_case} END AS resolution,
                COALESCE({", ".join(f"b_{r}" for r in resolutions)})
                  AS bucket_start,
@@ -166,11 +169,11 @@ def hypertable_rollup(events: DataFrame, ts_col: str = "ts",
                COUNT(v) AS n,
                CAST(SUM(CAST(ROUND(v * 100) AS BIGINT)) AS DOUBLE) / 100
                  AS sum_value
-        FROM __rollup_in
+        FROM {{rollup_in}}
         GROUP BY GROUPING SETS ({sets})
         HAVING CASE {res_case} END IS NOT NULL
         ORDER BY resolution, bucket_start, key
-    """)
+    """, rollup_in=buckets)
 
 
 def gap_filled_hourly(events: DataFrame, ts_col: str = "ts",
@@ -198,33 +201,30 @@ def gap_filled_hourly(events: DataFrame, ts_col: str = "ts",
     if method == "recursive":
         # scope BOTH side effects: the recursion-limit conf is saved and
         # restored (pattern: operators/layout.py outputTimestampType),
-        # and the input view gets a unique name dropped after use. The
-        # recursion limit is read at EXECUTION time, so the calendar is
+        # and the input binds as a per-statement view. The recursion
+        # limit is read at EXECUTION time, so the calendar is
         # materialized eagerly (localCheckpoint — one row per hour,
         # bounded) inside the scoped region; the conf seen by the rest
         # of the session is exactly what it was before this call.
-        import uuid
-
-        view = f"__gapfill_in_{uuid.uuid4().hex[:12]}"
         conf_key = "spark.sql.cteRecursionLevelLimit"
         prev = spark.conf.get(conf_key, None)
         spark.conf.set(conf_key, "1000000")
-        events.select(F.col(ts_col).alias("ts")).createOrReplaceTempView(view)
         try:
-            cal = spark.sql(f"""
+            cal = sql_with_views(spark, """
                 WITH RECURSIVE cal(h, hi) AS (
                   SELECT CAST(date_trunc('hour', MIN(ts)) AS TIMESTAMP),
                          CAST(date_trunc('hour', MAX(ts)) AS TIMESTAMP)
-                  FROM {view}
+                  FROM {events}
                   UNION ALL
                   SELECT h + INTERVAL 1 HOUR, hi FROM cal WHERE h < hi
-                ) SELECT h FROM cal""").localCheckpoint(eager=True)
+                ) SELECT h FROM cal""",
+                events=events.select(F.col(ts_col).alias("ts")),
+            ).localCheckpoint(eager=True)
         finally:
             if prev is None:
                 spark.conf.unset(conf_key)
             else:
                 spark.conf.set(conf_key, prev)
-            spark.catalog.dropTempView(view)
     else:
         bounds = events.agg(
             F.date_trunc("hour", F.min(ts_col)).alias("lo"),

@@ -11,7 +11,9 @@ Each command is a small dataclass with `run(ctx) -> DataFrame` —
 the Python analogue of the reference's `LeafRunnableCommand` specs
 (`LightningCommandBase.scala:34-108`): driver-side metastore I/O, with
 Spark jobs only where the command semantically needs them (REGISTER
-CATALOG schema snaphots, ACTIVATE analysis, DQ runs).
+CATALOG schema snaphots, ACTIVATE analysis, DQ runs). A command's own
+rows come back as a local relation (`session.local_frame`), which
+collects without a job, like the reference's command results.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ from lightning_metastore_spark.parser.create_table import (
     parse_create_table,
     split_ddl_bundle,
 )
+from lightning_metastore_spark.session import local_frame, sql_with_views
 
 _COMMENT = re.compile(r"(--[^\n]*)|(/\*.*?\*/)", re.S)
 
@@ -132,7 +135,7 @@ class Command:
 
     @staticmethod
     def _df(ctx, rows, schema) -> DataFrame:
-        return ctx.spark.createDataFrame(rows, schema)
+        return local_frame(ctx.spark, rows, schema)
 
 
 @dataclass
@@ -1549,8 +1552,8 @@ class RunDQ(Command):
             cte_defs = {k: v for k, v in ann["args"].items()
                         if k not in ("name", "expression")}
             # each CTE body resolves to a DataFrame; the checked table
-            # and the CTEs reach spark.sql as {placeholders}, so no
-            # named view is registered
+            # and the CTEs reach sql_with_views as {placeholders}, so
+            # no named view outlives the statement
             dfs = {"rows": df}
             ctes = []
             for i, (k, v) in enumerate(cte_defs.items()):
@@ -1560,7 +1563,8 @@ class RunDQ(Command):
             # ${var} becomes a subquery over its CTE (scalar or IN-list)
             expr_sub = re.sub(r"\$\{\{(\w+)\}\}", r"(SELECT * FROM \1)",
                               escape_braces(expr))
-            stats = ctx.spark.sql(
+            stats = sql_with_views(
+                ctx.spark,
                 f"{prefix}SELECT COUNT(*) AS total, "
                 f"CAST(SUM(CASE WHEN {expr_sub} THEN 1 ELSE 0 END) AS BIGINT)"
                 f" AS valid FROM {{rows}}", **dfs)
@@ -1676,7 +1680,8 @@ class RunPipeline(Command):
                 text_col=text_col, batch_m=batch_m)
             if save:
                 bpe.save_bpe_merges(df.sparkSession, merges, save)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(i, l, r, int(c)) for i, (l, r, c) in enumerate(merges)],
                 "rank long, left string, right string, pair_freq long")
 
@@ -1694,7 +1699,8 @@ class RunPipeline(Command):
                 text_col=text_col)
             if save:
                 unigram_lm.save_unigram_lm(df.sparkSession, pieces, save)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(p, float(s)) for p, s in pieces],
                 "piece string, logprob double")
 
@@ -1710,7 +1716,8 @@ class RunPipeline(Command):
             """Compact a parquet directory (OPTIONS(path, out_path)); ON table supplies the session only."""
             stats = layout.compact_parquet(df.sparkSession, path, out_path,
                                            target_mb=target_mb)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(stats["n_input_files"], float(stats["input_mb"]),
                   stats["n_output_files"], out_path)],
                 "n_input_files long, input_mb double, "
@@ -1720,7 +1727,8 @@ class RunPipeline(Command):
             """Write the table Z-order clustered on cols to OPTIONS(path)."""
             layout.write_zorder_clustered(df, path, list(cols),
                                           n_files=n_files)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(path, ",".join(cols), n_files)],
                 "path string, cols string, n_files long")
 
@@ -1728,7 +1736,8 @@ class RunPipeline(Command):
             """Write the table range-clustered on cols to OPTIONS(path)."""
             layout.write_range_clustered(df, path, list(cols),
                                          n_files=n_files)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(path, ",".join(cols), n_files)],
                 "path string, cols string, n_files long")
 
@@ -1736,7 +1745,8 @@ class RunPipeline(Command):
             """Export deterministic pseudo-random training shards to OPTIONS(path)."""
             layout.write_training_shards(df, path, n_shards=n_shards,
                                          seed=seed, id_col=id_col)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(path, n_shards, seed)],
                 "path string, n_shards long, seed string")
 
@@ -1753,7 +1763,8 @@ class RunPipeline(Command):
                 contamination as cont)
             bloom = cont.build_ngram_bloom(df, n=n, n_bits=n_bits, k=k)
             cont.save_ngram_bloom(df.sparkSession, bloom, save)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(save, bloom["n_bits"], bloom["k"], bloom["n"],
                   bloom["n_grams"], float(cont.bloom_fp_rate(bloom)))],
                 "path string, n_bits long, k long, n long, "
@@ -1772,7 +1783,8 @@ class RunPipeline(Command):
             """Train PQ codebooks on the embedding table; OPTIONS(save '...') persists the artifact."""
             B = quantization.pq_train(df, m=m, k=k, iters=iters)
             quantization.save_pq_codebooks(df.sparkSession, B, save)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(save, int(B.shape[0]), int(B.shape[1]),
                   int(B.shape[2]))],
                 "path string, m long, k long, dsub long")
@@ -1815,7 +1827,8 @@ class RunPipeline(Command):
             from lightning_metastore_spark.operators import lm_filter
             stats = lm_filter.train_bigram_lm(df, save,
                                               text_col=text_col)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(save, stats["n_total"], stats["vocab"])],
                 "path string, n_total long, vocab long")
 
@@ -1833,7 +1846,8 @@ class RunPipeline(Command):
             stats = lm_filter.train_kn_lm(
                 df, save, order=order, min_count=min_count,
                 discount=discount, text_col=text_col)
-            return df.sparkSession.createDataFrame(
+            return local_frame(
+                df.sparkSession,
                 [(save, stats["order"], stats["vocab"],
                   stats["u_types"], stats["t_total"])],
                 "path string, order long, vocab long, u_types long, "

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "lightning_metastore_spark",
@@ -42,6 +44,46 @@ def get_spark(app_name: str = "lightning_metastore_spark",
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A small driver-side result (a command's rows, a report) as a
+    DataFrame over a `LocalRelation`: its rows travel once as an Arrow
+    table, so `collect()` runs no Spark job and starts no Python
+    worker, where `createDataFrame(list)` parallelizes a Python RDD.
+    ``schema`` is a DDL string or StructType and fixes the column
+    types and nullability; ``rows`` are tuples in its column order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+def sql_with_views(spark: SparkSession, template: str, **dfs) -> DataFrame:
+    """``spark.sql(template)`` analysed with each ``{name}`` standing
+    for the DataFrame ``dfs[name]``, held in a temp view that lives only
+    while the statement is analysed. The views are dropped from the
+    session catalog directly: PySpark's `spark.sql(template, **dfs)`
+    drops them through `spark.catalog.dropTempView`, which re-analyses
+    each view (~1 ms) to uncache it, and so uncaches the user's cached
+    DataFrame whose plan equals a relation's."""
+    tag = uuid.uuid4().hex
+    names = {k: f"_lightning_{tag}_{k}" for k in dfs}
+    catalog = spark._jsparkSession.sessionState().catalog()
+    try:
+        for k, df in dfs.items():
+            df.createOrReplaceTempView(names[k])
+        return spark.sql(template.format(**names))
+    finally:
+        for name in names.values():
+            catalog.dropTempView(name)
 
 
 TPCH_TABLES = (

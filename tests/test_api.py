@@ -140,6 +140,48 @@ def test_api_max_rows_cap(guarded_server):
     assert status == 200 and len(rows) == 5
 
 
+def test_api_local_results_run_no_job(spark, server, monkeypatch):
+    """Command results over REST are LocalRelations: collected on the
+    driver without a Spark job, with the same JSON bodies, and capped
+    by slicing; any other plan still streams under a CollectLimit."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs_without_group():
+        bus.waitUntilEmpty()  # job events reach the tracker asynchronously
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    tables = ["customer", "documents", "embeddings", "events", "lineitem",
+              "nation", "orders", "part", "region", "supplier"]
+    before = jobs_without_group()
+    assert _post_q(server, f"REGISTER PARQUET DATASOURCE nums "
+                           f"OPTIONS(path '{SF_DIR}') "
+                           f"NAMESPACE lightning.datasource.file") == (
+        200, [{"registered": "lightning.datasource.file.nums"}])
+    assert _post_q(server, "SHOW TABLES IN lightning.datasource.file.nums") \
+        == (200, [{"tableName": t} for t in tables])
+    assert jobs_without_group() == before
+
+    plans = []
+    to_local_iterator = type(spark.range(1)).toLocalIterator
+
+    def recording(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_local_iterator(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark.range(1)), "toLocalIterator", recording)
+    capped = LightningAPIServer(server.ctx, max_rows=5).start()
+    try:
+        shown = _post_q(capped, "SHOW TABLES IN lightning.datasource.file.tpch")
+        assert shown == (200, [{"tableName": t} for t in tables[:5]])
+        assert plans == []
+        assert _post_q(capped, "SELECT id FROM range(1000)") == (
+            200, [{"id": i} for i in range(5)])
+    finally:
+        capped.stop()
+    assert len(plans) == 1 and "CollectLimit 5" in plans[0]
+
+
 def test_api_query_timeout_408(guarded_server):
     """A runaway query is cancelled via its job group: clean 408 before
     any rows are sent."""

@@ -60,9 +60,17 @@ def test_register_parquet_datasource_and_query(ctx, spark):
     assert ctx.sql("SELECT count(*) AS n FROM v_orders"
                    ).collect()[0].n == n
     spark.catalog.dropTempView("v_orders")
+    # a routed query over a table the user has cached keeps it cached
+    cached = ctx.table(t).cache()
+    cached.count()
+    try:
+        assert ctx.sql(f"SELECT count(*) AS n FROM {t}").collect()[0].n == n
+        assert cached.storageLevel.useMemory
+    finally:
+        cached.unpersist()
     # resolution leaves no view behind in the session catalog
     left = [v.name for v in spark.catalog.listTables()
-            if v.name.startswith(("l_", "_pyspark_"))]
+            if v.name.startswith(("l_", "_pyspark_", "_lightning_"))]
     assert left == []
 
 
@@ -130,6 +138,76 @@ def test_describe_datasource_masks_credentials(ctx):
     assert props["type"] == "JDBC"
     assert props["option:password"] == "***"
     assert props["option:url"] == "jdbc:postgresql://h/db"
+
+
+# id -> (statement, declared result DDL, its rows); the rows are those
+# the commands returned when their results were Python-RDD DataFrames
+COMMAND_RESULTS = {
+    "show_namespaces": (
+        "SHOW NAMESPACES IN lightning",
+        "namespace string", [("datasource",), ("metastore",)]),
+    "show_tables": (
+        "SHOW TABLES IN lightning.datasource.file.tpch",
+        "tableName string",
+        [(t,) for t in ("customer", "documents", "embeddings", "events",
+                        "lineitem", "nation", "orders", "part", "region",
+                        "supplier")]),
+    "show_namespaces_or_tables": (
+        "SHOW NAMESPACES OR TABLES IN lightning.datasource.file",
+        "name string, type string", [("tpch", "datasource")]),
+    "describe_table": (
+        "DESCRIBE TABLE lightning.datasource.file.tpch.region",
+        "col_name string, data_type string, nullable boolean",
+        [("r_regionkey", "int", True), ("r_name", "string", True)]),
+    "describe_datasource": (
+        "DESCRIBE DATASOURCE lightning.datasource.file.tpch",
+        "property string, value string",
+        [("name", "tpch"), ("type", "PARQUET"),
+         ("namespace", "lightning.datasource.file"),
+         ("option:path", SF_DIR)]),
+    "list_dq": (
+        "LIST DQ USL lightning.metastore.crm.ordermart",
+        "name string, table string, type string, expression string",
+        [("_pk", "customers", "Primary Key Constraint", "c_custkey"),
+         ("_uk", "customers", "Unique Constraint", "c_custkey,c_name"),
+         ("_pk", "big_orders", "Primary Key Constraint", "o_orderkey"),
+         ("_fk", "big_orders", "Foreign Key Constraint",
+          "o_custkey -> lightning.metastore.crm.ordermart.customers"
+          "(c_custkey)")]),
+    "register_datasource": (
+        f"REGISTER PARQUET DATASOURCE nums OPTIONS(path '{SF_DIR}') "
+        "NAMESPACE lightning.datasource.file",
+        "registered string", [("lightning.datasource.file.nums",)]),
+    "drop_datasource": (
+        "DROP DATASOURCE lightning.datasource.file.tpch",
+        "dropped string", [("datasource.file.tpch",)]),
+}
+
+
+@pytest.mark.parametrize("case", list(COMMAND_RESULTS))
+def test_command_result_is_local_and_job_free(ctx, spark, case):
+    """A command's result is a LocalRelation built on the driver:
+    collecting it runs no Spark job, and its schema (nullability too)
+    and rows are the declared ones."""
+    import uuid
+
+    from pyspark.sql.types import StructType
+
+    stmt, ddl, rows = COMMAND_RESULTS[case]
+    _setup_usl(ctx)
+    df = ctx.sql(stmt)
+    assert df.isLocal()
+    sc = spark.sparkContext
+    group = f"command-result-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, stmt)
+    try:
+        got = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    # select("*") reads the schema back from the JVM's analysed plan
+    assert df.select("*").schema == StructType.fromDDL(ddl)
+    assert [tuple(r) for r in got] == rows
 
 
 def test_register_catalog_snapshot(ctx):

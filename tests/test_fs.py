@@ -72,6 +72,53 @@ def test_local_contract(tmp_path):
     _exercise(LocalFileSystem(), str(tmp_path))
 
 
+def test_local_write_is_atomic_for_readers(tmp_path):
+    """A reader racing a rewrite (REGISTER OR REPLACE of a datasource
+    document) sees the old document or the new one, never an empty or
+    partial one; no temp file is left beside the target."""
+    import json
+    import sys
+    import threading
+
+    fs = LocalFileSystem()
+    path = fs.join(str(tmp_path), "src_fs.json")
+    fs.write_bytes(path, json.dumps({"v": -1}).encode())
+    done = threading.Event()
+    bad = []
+
+    def writer():
+        try:
+            for i in range(200):
+                doc = {"v": i, "pad": "x" * (1000 + 997 * (i % 50))}
+                fs.write_bytes(path, json.dumps(doc).encode())
+        finally:
+            done.set()
+
+    def reader():
+        while not done.is_set():
+            raw = fs.read_bytes(path)
+            try:
+                json.loads(raw)
+            except ValueError:
+                bad.append(raw[:40])
+
+    threads = [threading.Thread(target=writer),
+               threading.Thread(target=reader)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads more finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert bad == []
+    assert json.loads(fs.read_bytes(path))["v"] == 199
+    assert fs.listdir(str(tmp_path)) == ["src_fs.json"]
+
+
 def test_memory_contract():
     _exercise(InMemoryFileSystem(), "wh/root")
 

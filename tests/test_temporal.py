@@ -123,7 +123,16 @@ def test_hypertable_rollup_consistency(spark):
          (_ts("2024-01-01T11:15:00"), "a", 4.0),
          (_ts("2024-01-02T00:00:00"), "b", 8.0)],
         "ts timestamp, event_type string, value double")
-    rows = hypertable_rollup(ev, resolutions=("hour", "day")).collect()
+    # the rollup binds its input per statement: a user's own view named
+    # like the old fixed view survives, and no view is left behind
+    spark.range(3).createOrReplaceTempView("__rollup_in")
+    views = {t.name for t in spark.catalog.listTables()}
+    try:
+        rows = hypertable_rollup(ev, resolutions=("hour", "day")).collect()
+        assert spark.table("__rollup_in").count() == 3
+        assert {t.name for t in spark.catalog.listTables()} == views
+    finally:
+        spark.catalog.dropTempView("__rollup_in")
     hours = {(r.bucket_start.isoformat(), r.key): (r.n, r.sum_value)
              for r in rows if r.resolution == "hour"}
     days = {(r.bucket_start.isoformat(), r.key): (r.n, r.sum_value)
@@ -166,10 +175,10 @@ def test_gap_filled_recursive_side_effect_free(spark):
     key = "spark.sql.cteRecursionLevelLimit"
     before = spark.conf.get(key, None)
     events = load_tables(spark, SF_DIR, ("events",))["events"]
+    views = {t.name for t in spark.catalog.listTables()}
     out = gap_filled_hourly(events, method="recursive")
     assert spark.conf.get(key, None) == before
-    assert not [v.name for v in spark.catalog.listTables()
-                if v.name.startswith("__gapfill_in")]
+    assert {t.name for t in spark.catalog.listTables()} == views
     assert out.count() > 0  # still executable after conf restore
 
 
