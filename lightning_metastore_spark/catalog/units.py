@@ -8,6 +8,16 @@ Reference: one `CatalogUnit` per source family
 `spark.read` so Catalyst's DSv2 pushdown (predicates, column pruning,
 partition pruning) applies untouched — the unit adds zero execution
 code, exactly like the reference delegates to Spark's own tables.
+
+A parquet file table gets its schema from one footer read on the driver
+with Spark's own converter and the session conf, the file Spark's
+inference would read, and hands it to the reader, so loading it runs no
+Spark job (the reference snapshots a table's StructType instead,
+`_table.json`). Spark infers the schema, in a job, whenever that could
+differ: reader options besides `path`, `spark.sql.parquet.mergeSchema`
+or `spark.sql.parquet.ignoreVariantAnnotation` on, subdirectories
+(partition discovery), no data file, glob or non-local paths, or a
+footer that fails to read or convert.
 """
 
 from __future__ import annotations
@@ -16,6 +26,7 @@ import os
 import re
 from typing import Optional
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -101,8 +112,47 @@ class FileCatalogUnit(CatalogUnit):
             f"no {self.fmt} data at {base} for table "
             f"{'.'.join([self.ds.name] + residual)}")
 
+    def _footer_schema(self, spark: SparkSession, path: str):
+        """The JVM `StructType` Spark's parquet inference would give
+        ``path``, converted from the footer inference reads, or None
+        where the module docstring's fallbacks send the load to
+        inference. Any error gives None too, so corrupt files and types
+        the converter rejects (nanosecond timestamps without
+        `nanosAsLong`) fail with inference's own error."""
+        if (self.fmt != "parquet" or set(self.ds.options) != {"path"}
+                or any(c in path for c in "{}[]*?\\")):
+            return None
+        try:
+            target = _parquet_schema_file(path)
+            if target is None:
+                return None
+            state = spark._jsparkSession.sessionState()
+            conf = state.conf()
+            converter = _jclass(spark, _PARQUET_PKG
+                                + "ParquetToSparkSchemaConverter")(conf)
+            # inference's converter leaves the variant flag at its default
+            if (conf.isParquetSchemaMergingEnabled()
+                    or converter.ignoreVariantAnnotation()):
+                return None
+            hpath = _jclass(spark, "org.apache.hadoop.fs.Path")(target)
+            meta = _jclass(spark, _PARQUET_PKG + "ParquetFooterReader").readFooter(
+                _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile")
+                .fromPath(hpath, state.newHadoopConf()),
+                _jclass(spark, "org.apache.parquet.format.converter."
+                        "ParquetMetadataConverter").SKIP_ROW_GROUPS)
+            footer = _jclass(spark, "org.apache.parquet.hadoop.Footer")(
+                hpath, meta)
+            return _jclass(spark, _PARQUET_PKG + "ParquetFileFormat") \
+                .readSchemaFromFooter(footer, converter).asNullable()
+        except Exception:  # noqa: BLE001 — inference reports the error
+            return None
+
     def load_table(self, spark: SparkSession, residual: list[str]) -> DataFrame:
         path = self._resolve_path(residual)
+        schema = self._footer_schema(spark, path)
+        if schema is not None:
+            return DataFrame(spark._jsparkSession.read().format("parquet")
+                             .schema(schema).load(path), spark)
         if self.fmt == "avro":
             try:
                 df = self._reader(spark).load(path)
@@ -297,6 +347,50 @@ class JDBCCatalogUnit(CatalogUnit):
         if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             return name
         return '"' + name.replace('"', '""') + '"'
+
+
+_PARQUET_PKG = "org.apache.spark.sql.execution.datasources.parquet."
+
+
+def _jclass(spark: SparkSession, name: str) -> JavaClass:
+    """A JVM class by its full name. `spark._jvm.<package path>` costs
+    one py4j round trip per name segment (~2 ms for a Spark class)."""
+    return JavaClass(name, spark._jvm._gateway_client)
+
+
+def _spark_lists(name: str) -> bool:
+    """Whether Spark's file listing keeps an entry of this name
+    (`InMemoryFileIndex.shouldFilterOutPathName`): hidden `_`/`.` names
+    and `._COPYING_` files are dropped, the parquet summary files
+    kept."""
+    hidden = ((name.startswith("_") and "=" not in name)
+              or name.startswith(".") or name.endswith("._COPYING_"))
+    return not hidden or name.startswith(("_common_metadata", "_metadata"))
+
+
+def _parquet_schema_file(path: str) -> Optional[str]:
+    """The file whose footer Spark's parquet inference reads without
+    `mergeSchema` (`ParquetUtils.inferSchema`): `_common_metadata`, else
+    `_metadata`, else the first data file in path order. None when
+    ``path`` holds a subdirectory or no data file."""
+    if os.path.isfile(path):
+        return path if _spark_lists(os.path.basename(path)) else None
+    names = []
+    with os.scandir(path) as it:
+        for e in it:
+            if not _spark_lists(e.name):
+                continue
+            if e.is_dir():
+                return None
+            names.append(e.name)
+    data = [n for n in names if n not in ("_common_metadata", "_metadata")]
+    if not data:
+        return None
+    for summary in ("_common_metadata", "_metadata"):
+        if summary in names:
+            return os.path.join(path, summary)
+    # Spark sorts Java strings, i.e. by UTF-16 code unit
+    return os.path.join(path, min(data, key=lambda n: n.encode("utf-16-be")))
 
 
 def _is_missing_source_error(e: Exception) -> bool:

@@ -358,36 +358,6 @@ ORDER BY o_orderpriority, o_orderstatus
 """
 
 
-def q_setops_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operators: customers with both an URGENT and a LOW order
-    (INTERSECT) minus those with any 'F' order (EXCEPT)."""
-    load_tables(spark, sf_dir, ("customer", "orders"))
-    return spark.sql("""
-        SELECT c_custkey FROM customer JOIN orders ON c_custkey = o_custkey
-        WHERE o_orderpriority = '1-URGENT'
-        INTERSECT
-        SELECT c_custkey FROM customer JOIN orders ON c_custkey = o_custkey
-        WHERE o_orderpriority = '5-LOW'
-        EXCEPT
-        SELECT c_custkey FROM customer JOIN orders ON c_custkey = o_custkey
-        WHERE o_orderstatus = 'F'
-        ORDER BY c_custkey
-    """)
-
-
-Q_SETOPS_ORACLE = """
-SELECT c_custkey FROM customer JOIN orders ON c_custkey = o_custkey
-WHERE o_orderpriority = '1-URGENT'
-INTERSECT
-SELECT c_custkey FROM customer JOIN orders ON c_custkey = o_custkey
-WHERE o_orderpriority = '5-LOW'
-EXCEPT
-SELECT c_custkey FROM customer JOIN orders ON c_custkey = o_custkey
-WHERE o_orderstatus = 'F'
-ORDER BY c_custkey
-"""
-
-
 def q_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP and CUBE in one gate entry (tagged union): each is a single
     Expand + partial/final hash agg — one scan per input table, no

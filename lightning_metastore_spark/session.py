@@ -8,6 +8,7 @@ the Pandas-UDF slow path, UTC session time so results are oracle-stable.
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 import uuid
@@ -46,6 +47,14 @@ def get_spark(app_name: str = "lightning_metastore_spark",
     return builder.getOrCreate()
 
 
+@functools.lru_cache(maxsize=256)
+def _ddl_schema(ddl: str) -> StructType:
+    """``StructType.fromDDL`` parses through the JVM (~2 ms of py4j);
+    command DDL strings are constants, so each is parsed once per
+    process. The StructType is shared: callers must not mutate it."""
+    return StructType.fromDDL(ddl)
+
+
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """A small driver-side result (a command's rows, a report) as a
     DataFrame over a `LocalRelation`: its rows travel once as an Arrow
@@ -57,7 +66,7 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
+        schema = _ddl_schema(schema)
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) or [()] * len(arrow_schema)
     table = pa.Table.from_arrays(
