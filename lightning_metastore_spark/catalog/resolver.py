@@ -23,10 +23,10 @@ from __future__ import annotations
 
 import datetime as dt
 import itertools
+import json
 import os
 import re
 import threading
-from collections import Counter
 from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -42,355 +42,286 @@ from lightning_metastore_spark.model.metastore import (
 )
 from lightning_metastore_spark.session import sql_with_views
 
-# a `lightning.datasource|metastore...` chain, for the hint extraction
-_CHAIN = re.compile(
-    r"\blightning\.(?:datasource|metastore)(?:\.[A-Za-z_][A-Za-z0-9_\-]*)+",
-    re.IGNORECASE,
-)
-# quoted regions, blanked before the hint extraction matches keywords
-_QUOTED = re.compile(r"('(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|`(?:[^`]|``)*`)")
-# how often a statement names `lightning.` — more often than it has
-# lightning relations means some column is qualified by a full chain
-_MENTION = re.compile(r"\blightning`?\s*\.", re.IGNORECASE)
-
-
 class ResolutionError(Exception):
     pass
 
 
-# `[qualifier.]col <op> literal` — the conjunct shape lakehouse file
-# skipping understands; literals are a number or a single-quoted
-# string with an optional DATE/TIMESTAMP type keyword. The keyword is
-# NOT dropped: it becomes the literal's Python type (datetime.date /
-# datetime.datetime), so the pruners can refuse a typed literal
-# against a mismatched column — `scol = DATE '2024-01-01'` makes
-# Spark cast the STRING COLUMN to date, so comparing raw string stats
-# was the r15 judge's confirmed wrong-answer edge.
-_COL = r"((?:[A-Za-z_][\w\-]*\.)*)([A-Za-z_][\w]*)"  # (qualifier, col)
-_LIT = r"(?:(-?\d+(?:\.\d+)?)|(?:(DATE|TIMESTAMP)\s+)?'((?:[^']|'')*)')"
-_OP = r"\s*(<=|>=|=|<|>)\s*"
-_SIMPLE_CONJ = re.compile(rf"^\s*{_COL}{_OP}{_LIT}\s*$", re.I)
-# the reversed spelling `literal <op> col` — the operator flips
-# (`5 < col` == `col > 5`)
-_SIMPLE_CONJ_REV = re.compile(rf"^\s*{_LIT}{_OP}{_COL}\s*$", re.I)
+# File-skipping hints are read from the JSON form of the plan that
+# Spark's parser produced (`TreeNode.toJSON`): each tree is a pre-order
+# list of nodes, a node's children follow it, and plans or expressions
+# held in fields (subquery plans, CTE bodies) are nested lists. Spark
+# has already decided what a comment, a quote, an escape, BETWEEN,
+# precedence or a typed literal means; the reader only matches shapes.
+_CMP = {"EqualTo": "=", "LessThan": "<", "LessThanOrEqual": "<=",
+        "GreaterThan": ">", "GreaterThanOrEqual": ">="}
 _FLIP_OP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "="}
-# `[qualifier.]col BETWEEN lit AND lit` — reconstituted from the
-# AND-split pieces and rewritten to `>= AND <=` (r15 verdict #3: a
-# BETWEEN used to disable the whole WHERE). NOT BETWEEN never matches
-# (the column token is anchored directly before BETWEEN).
-_BETWEEN_CONJ = re.compile(
-    rf"^\s*{_COL}\s+BETWEEN\s+{_LIT}\s+AND\s+{_LIT}\s*$", re.I)
-# `[qualifier.]col IS [NOT] NULL` — nullCount/partitionValues prune
-# these. IS NULL is NOT null-rejecting, so it is credited only in
-# single-relation queries (an outer join's null-extended rows satisfy
-# it — pruning the nullable side would change results).
-_NULL_CONJ = re.compile(rf"^\s*{_COL}\s+IS\s+(NOT\s+)?NULL\s*$", re.I)
-# `[qualifier.]col IN (lit, lit, ...)` — a file admits when ANY
-# member admits; every member must parse or the conjunct is skipped
-# (pruning on a subset would drop files the other members match)
-_LITERAL_ONE = re.compile(_LIT, re.I)
-_IN_CONJ = re.compile(
-    rf"^\s*{_COL}\s+IN\s*\(\s*((?:{_LIT}\s*,\s*)*{_LIT})\s*\)\s*$", re.I)
-_PRUNE_TAIL = re.compile(
-    r"\b(GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|WINDOW|UNION|EXCEPT|"
-    r"INTERSECT|DISTRIBUTE\s+BY|CLUSTER\s+BY|SORT\s+BY)\b",
-    re.IGNORECASE,
-)
-# canonical literal forms only — Spark's string casts accept looser
-# spellings ('2024-1-1') that Python would either reject (safe) or,
-# worse, read differently; pruning restricts itself to forms both
-# engines agree on and skips the conjunct otherwise (always sound)
-_CANON_DATE = re.compile(r"\d{4}-\d{2}-\d{2}")
-_CANON_TS = re.compile(
-    r"\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}(:\d{2}(\.\d{1,6})?)?)?"
-    r"(Z|[+-]\d{2}:?\d{2})?")
 
 
-def _typed_literal(num: Optional[str], kw: Optional[str],
-                   raw: Optional[str]):
-    """(number group, DATE/TIMESTAMP keyword, quoted body) -> the
-    conjunct literal, or None when the typed literal does not parse
-    canonically (the conjunct is then skipped — sound)."""
-    if num is not None:
-        return float(num) if "." in num else int(num)
-    s = raw.replace("''", "'")
-    if kw is None:
-        return s
-    s = s.strip()
-    if kw.upper() == "DATE":
-        return dt.date.fromisoformat(s) if _CANON_DATE.fullmatch(s) else None
-    # TIMESTAMP literal: keep wall-clock fields (naive) or the
-    # explicit offset; the pruners convert through the session tz
-    if not _CANON_TS.fullmatch(s):
-        return None
+def _kind(node: dict) -> str:
+    return node["class"].rsplit(".", 1)[-1]
+
+
+def _tree(text: str) -> list:
+    """A `toJSON()` string loaded, with every node's children listed
+    under "_kids"."""
+    def nest(value):
+        if isinstance(value, dict):
+            for v in value.values():
+                nest(v)
+        elif isinstance(value, list):
+            for v in value:
+                nest(v)
+            if (value and isinstance(value[0], dict)
+                    and "num-children" in value[0]):
+                it = iter(value)
+
+                def build():
+                    node = next(it)
+                    node["_kids"] = [build()
+                                     for _ in range(node["num-children"])]
+                    return node
+                build()
+    tree = json.loads(text)
+    nest(tree)
+    return tree
+
+
+def _nodes(value):
+    """Every node of a `_tree`, nested plans and expressions included."""
+    if isinstance(value, list):
+        for v in value:
+            yield from _nodes(v)
+    elif isinstance(value, dict):
+        if "class" in value:
+            yield value
+        for k, v in value.items():
+            if k != "_kids":
+                yield from _nodes(v)
+
+
+def _plan_tree(plan) -> Optional[list]:
+    """``plan`` as a `_tree`, or None when Spark cannot render it."""
     try:
-        return dt.datetime.fromisoformat(s.replace("Z", "+00:00"))
-    except ValueError:
+        return _tree(plan.toJSON())
+    except Exception:
         return None
 
 
-def _mask_quoted(sql: str) -> str:
-    """Quoted regions blanked (same length), so keyword/structure
-    regexes never match inside literals while offsets stay aligned
-    with the original text."""
-    parts = _QUOTED.split(sql)
-    return "".join(p if i % 2 == 0 else " " * len(p)
-                   for i, p in enumerate(parts))
-
-
-def _text_unreadable(sql: str, masked: str) -> bool:
-    """True when the conjunct regexes cannot read ``sql`` faithfully:
-    a comment outside quotes (`WHERE v >= 0 -- AND id >= 35` would
-    credit the commented-out conjunct) or a backslash (`\\'` ends a
-    `_QUOTED` region early). Skipping hints is always sound."""
-    return "\\" in sql or "--" in masked or "/*" in masked
-
-
-_JOIN_TYPE_TAIL = re.compile(
-    r"(?:\s+(?:NATURAL|INNER|LEFT|RIGHT|FULL|CROSS|OUTER|SEMI|ANTI))+"
-    r"\s*$", re.IGNORECASE)
-_RELATION = re.compile(
-    r"([A-Za-z_][\w.\-]*)(?:\s+(?:AS\s+)?([A-Za-z_][\w]*))?",
-    re.IGNORECASE)
-
-
-def _parse_from_relations(from_masked: str) -> Optional[list[tuple]]:
-    """FROM-clause text (masked) -> [(relation name, alias|None), ...]
-    or None when the clause has any shape beyond plain relations
-    joined with [type] JOIN ... ON ... or commas. ON conditions are
-    skipped, not parsed — WHERE is the only conjunct source."""
-    if "(" in from_masked:          # subquery/VALUES/USING (cols)
-        return None
-    rels: list[tuple] = []
-    for comma_part in from_masked.split(","):
-        for j, seg in enumerate(re.split(r"\bJOIN\b", comma_part,
-                                         flags=re.IGNORECASE)):
-            if j > 0:
-                m_on = re.search(r"\bON\b", seg, re.IGNORECASE)
-                if m_on:
-                    seg = seg[:m_on.start()]
-            seg = _JOIN_TYPE_TAIL.sub("", seg.strip()).strip()
-            if not seg:
-                return None
-            m = _RELATION.fullmatch(seg)
-            if not m:
-                return None
-            rels.append((m.group(1), m.group(2)))
-    return rels or None
-
-
-def _open_between_depth0(piece_masked: str) -> bool:
-    """True when the piece carries a BETWEEN at paren depth 0 — its
-    AND was consumed by the top-level split, so the piece must be
-    reconstituted with its successor."""
-    depth = 0
-    for m in re.finditer(r"[()]|\bBETWEEN\b", piece_masked,
-                         re.IGNORECASE):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            return True
-    return False
-
-
-def extract_prune_conjuncts(sql: str
-                            ) -> Optional[dict[str, list[tuple]]]:
-    """{table chain: [(col, op, literal), ...]} when the statement is
-    a SINGLE-select query whose FROM is plain relations (optionally
-    JOINed) and whose WHERE is a top-level AND of conjuncts — the
-    shape whose simple `col op literal` members can be handed to the
-    Delta/Iceberg units as PLANNING hints (stats/manifest-bounds file
-    skipping). A conjunct is credited to a chain only when its
-    qualifier resolves UNIQUELY to that relation (unqualified
-    conjuncts only in single-relation queries); WHERE conjuncts are
-    null-rejecting, so crediting them is sound for every join type
-    (an outer join's null-extended rows fail `col op literal` exactly
-    like the pruned rows did). Every structural guard errs toward
-    None: subqueries, set ops, a top-level OR (SQL precedence makes
-    `a AND b OR c` NOT a conjunction — the r15 ADVICE edge), or an
-    unparseable FROM all disable extraction, and non-simple conjuncts
-    (OR-groups, NOT, IN, LIKE, functions) are individually ignored —
-    always sound, because a top-level AND conjunct independently
-    bounds the matching rows and the full WHERE still executes on the
-    kept files. `a BETWEEN x AND y` is reconstituted from the split
-    pieces and rewritten to two conjuncts."""
-    masked = _mask_quoted(sql)
-    if _text_unreadable(sql, masked):
-        return None
-    if len(re.findall(r"\bSELECT\b", masked, re.I)) != 1:
-        return None  # subquery / set operation
-    m_from = re.search(r"\bFROM\b", masked, re.I)
-    m_where = re.search(r"\bWHERE\b", masked, re.I)
-    if not m_from or not m_where or m_where.start() < m_from.end():
-        return None
-    rels = _parse_from_relations(masked[m_from.end():m_where.start()])
-    if rels is None:
-        return None
-    # every lightning chain in the statement must be one of the FROM
-    # relations — a chain surfacing anywhere else (column-suffixed
-    # projections, expressions) is a shape this parse cannot vouch for
-    rel_names = {name for name, _a in rels}
-    if any(c not in rel_names for c in _CHAIN.findall(masked)):
-        return None
-    # qualifier -> relation index; a qualifier naming 2+ relations is
-    # ambiguous and credits nothing
-    _AMBIG = -1
-    qual_owner: dict[str, int] = {}
-    for idx, (name, alias) in enumerate(rels):
-        quals = {name.lower(), name.split(".")[-1].lower()}
-        if alias:
-            quals.add(alias.lower())
-        for q in quals:
-            qual_owner[q] = idx if q not in qual_owner else _AMBIG
-    # a chain registered twice in FROM (self-join) cannot take one
-    # alias's conjuncts — exclude it from pruning entirely
-    seen = Counter(name.lower() for name, _a in rels)
-    prunable = {idx for idx, (name, _a) in enumerate(rels)
-                if _CHAIN.fullmatch(name) and seen[name.lower()] == 1}
-    if not prunable:
-        return None
-    m_tail = _PRUNE_TAIL.search(masked, m_where.end())
-    end = m_tail.start() if m_tail else len(sql)
-    where_sql = sql[m_where.end():end]
-    where_masked = masked[m_where.end():end]
-    merged = _split_conjunct_pieces(where_sql, where_masked)
-    if merged is None:
-        return None
-
-    def _credit(qual: str) -> Optional[int]:
-        if not qual:
-            return (0 if len(rels) == 1 and 0 in prunable else None)
-        idx = qual_owner.get(qual.lower(), None)
-        if idx is None or idx == _AMBIG or idx not in prunable:
+def _name(rendered: str, sql: str) -> Optional[tuple]:
+    """The parts of a name that toJSON renders as `[a, b, c]`, or None
+    when a quoted part may itself hold ", " (the text then carries two
+    neighbouring pieces joined by it, quote characters doubled)."""
+    parts = tuple(rendered[1:-1].split(", "))
+    for a, b in zip(parts, parts[1:]):
+        if any(f"{a}, {b}".replace(q, q + q) in sql for q in "`\""):
             return None
-        return idx
+    return parts
 
+
+def _literal(node: dict):
+    """A Literal node as a hint value, else None: an int, a float (a
+    decimal with a fraction, or a double; never a FLOAT, which Spark
+    compares at single precision), a str, a date, or a timestamp as a
+    naive datetime on the session zone's wall clock (as Spark renders
+    it). TIMESTAMP_NTZ, NULL and every other type give none."""
+    if _kind(node) != "Literal" or node["value"] is None:
+        return None
+    v, t = node["value"], node["dataType"]
+    if t in ("integer", "long", "short", "byte"):
+        return int(v)
+    if t == "double" or str(t).startswith("decimal"):
+        return float(v) if "." in v or "E" in v else int(v)
+    if t == "string":
+        return v
+    if t == "date":
+        return dt.date.fromisoformat(v)
+    if t == "timestamp":
+        return dt.datetime.fromisoformat(v)
+    return None
+
+
+def _and_members(expr: dict):
+    if _kind(expr) == "And":
+        for kid in expr["_kids"]:
+            yield from _and_members(kid)
+    else:
+        yield expr
+
+
+def _conjunct(expr: dict, sql: str) -> list[tuple]:
+    """[(name parts, op, literal)] for one AND member: `col <op> lit`
+    either way round, literal BETWEEN (its two bounds), `IS [NOT] NULL`
+    and `IN (lit, ...)`; empty for any other shape."""
+    kind, kids = _kind(expr), expr["_kids"]
+    if kind == "UnresolvedFunction":
+        if expr["nameParts"].lower() != "[between]" or len(kids) != 3:
+            return []
+        terms = [(kids[0], ">=", kids[1]), (kids[0], "<=", kids[2])]
+    elif kind in _CMP:
+        left, right = kids
+        op = _CMP[kind]
+        if _kind(left) == "Literal":
+            left, right, op = right, left, _FLIP_OP[op]
+        terms = [(left, op, right)]
+    elif kind in ("IsNull", "IsNotNull"):
+        terms = [(kids[0], "isnull" if kind == "IsNull" else "notnull",
+                  None)]
+    elif kind == "In":
+        terms = [(kids[0], "in", kids[1:])]
+    else:
+        return []
+    out = []
+    for col, op, lit in terms:
+        parts = (_name(col["nameParts"], sql)
+                 if _kind(col) == "UnresolvedAttribute" else None)
+        if op == "in":
+            value = tuple(_literal(k) for k in lit)
+            ok = all(m is not None for m in value)
+        else:
+            value = None if lit is None else _literal(lit)
+            ok = lit is None or value is not None
+        if parts and ok:
+            out.append((parts, op, value))
+    return out
+
+
+def _leaves(plan: dict) -> Optional[list[tuple]]:
+    """[(rendered relation name, alias | None)] when ``plan`` is one
+    relation or a tree of Joins over relations, each optionally
+    aliased; None for any other shape."""
+    kind = _kind(plan)
+    if kind == "Join":
+        out = []
+        for kid in plan["_kids"]:
+            sub = _leaves(kid)
+            if sub is None:
+                return None
+            out += sub
+        return out
+    alias = None
+    if kind == "SubqueryAlias":
+        alias = plan["identifier"]["name"]
+        plan = plan["_kids"][0]
+    if _kind(plan) != "UnresolvedRelation":
+        return None
+    return [(plan["multipartIdentifier"], alias)]
+
+
+def extract_prune_conjuncts(tree: list, rels: list, sql: str
+                            ) -> Optional[dict[str, list[tuple]]]:
+    """{table chain: [(col, op, literal), ...]} planning hints for the
+    Delta/Iceberg units (stats / manifest-bounds file skipping), read
+    from ``tree`` (the `_plan_tree` of ``sql``'s parsed plan) whose
+    relations, in every scope, are ``rels``.
+
+    A conjunct is a top-level AND member of a Filter's condition whose
+    child is one relation or a tree of Joins over relations (a WHERE;
+    not a HAVING or a filter over a derived table). It credits the
+    relation its qualifier names uniquely: the alias, or for an
+    unaliased relation its last name part or full chain; unqualified
+    only when the Filter has one relation. WHERE conjuncts reject
+    nulls, so crediting them is sound for every join type; `IS NULL`
+    does not and credits single-relation Filters only. A chain named
+    more than once in the statement (self-join, subquery, CTE body,
+    union) gets no hint: hints are keyed by chain. Nor does time
+    travel, nor a name a quoted ", " makes ambiguous. Any failure
+    gives no hints. Always sound: Catalyst still applies the full
+    predicate to the kept files."""
+    keys = [".".join(r.parts).lower() for r in rels]
+    chains = {"[" + ", ".join(r.parts) + "]": ".".join(r.parts)
+              for r, key in zip(rels, keys)
+              if _is_lightning(r.parts) and r.tt is None
+              and keys.count(key) == 1
+              and not any(", " in p for p in r.parts)}
     out: dict[str, list[tuple]] = {}
-    for piece in merged:
-        for qual, col, op, lit in _piece_conjuncts(piece):
-            if op == "isnull" and len(rels) != 1:
-                continue  # not null-rejecting — joins unsafe
-            idx = _credit(qual)
-            if idx is None:
+    try:
+        for node in _nodes(tree):
+            if _kind(node) != "Filter":
                 continue
-            out.setdefault(rels[idx][0], []).append((col, op, lit))
-    out = {k: v for k, v in out.items() if v}
+            leaves = _leaves(node["_kids"][0])
+            if leaves is None:
+                continue
+            owner: dict = {}  # qualifier -> leaf index, -1 if shared
+            for i, (name, alias) in enumerate(leaves):
+                parts = tuple(name[1:-1].lower().split(", "))
+                for q in ({(alias.lower(),)} if alias
+                          else {parts[-1:], parts}):
+                    owner[q] = -1 if q in owner else i
+            single = 0 if len(leaves) == 1 else -1
+            for expr in _and_members(node["condition"][0]):
+                for parts, op, lit in _conjunct(expr, sql):
+                    if op == "isnull" and single < 0:
+                        continue
+                    qual = tuple(p.lower() for p in parts[:-1])
+                    i = owner.get(qual, -1) if qual else single
+                    chain = chains.get(leaves[i][0]) if i >= 0 else None
+                    if chain:
+                        out.setdefault(chain, []).append(
+                            (parts[-1], op, lit))
+    except Exception:
+        return None
     return out or None
 
 
-def _split_conjunct_pieces(where_sql: str, where_masked: str
-                           ) -> Optional[list[str]]:
-    """Top-level AND conjunct pieces of a WHERE body, BETWEENs
-    reconstituted — or None when the body is not a plain conjunction
-    (top-level OR, or a CASE whose own depth-0 AND tokens the split
-    could slice through)."""
-    if re.search(r"\bCASE\b", where_masked, re.I):
-        return None
-    pieces: list[str] = []
-    depth = 0
-    start = 0
-    for m in re.finditer(r"[()]|\bAND\b|\bOR\b", where_masked, re.I):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            if tok.upper() == "OR":
-                return None
-            pieces.append(where_sql[start:m.start()])
-            start = m.end()
-    pieces.append(where_sql[start:])
-    # reconstitute BETWEENs the split sliced through: a piece with a
-    # depth-0 BETWEEN lost its AND to the splitter, so its true
-    # conjunct is piece + " AND " + next piece
-    merged: list[str] = []
-    i = 0
-    while i < len(pieces):
-        if (_open_between_depth0(_mask_quoted(pieces[i]))
-                and i + 1 < len(pieces)):
-            merged.append(pieces[i] + " AND " + pieces[i + 1])
-            i += 2
-        else:
-            merged.append(pieces[i])
-            i += 1
-    return merged
+def _expression(spark, text: str) -> dict:
+    """The root of Spark's parse of an expression, as a `_tree` node."""
+    return _tree(spark._jsparkSession.sessionState().sqlParser()
+                 .parseExpression(text).toJSON())[0]
 
 
-def _piece_conjuncts(piece: str) -> list[tuple]:
-    """[(qualifier, col, op, literal)] for one conjunct piece —
-    empty when the piece is not a shape the pruners understand
-    (always sound: unparsed conjuncts still execute in the full
-    predicate). BETWEEN yields its two bounds; `isnull` is returned
-    and left to the CALLER's null-rejection policy."""
-    m = _SIMPLE_CONJ.match(piece)
-    if m:
-        lit = _typed_literal(*m.group(4, 5, 6))
-        if lit is None:
-            return []
-        return [(m.group(1).rstrip("."), m.group(2), m.group(3), lit)]
-    mr = _SIMPLE_CONJ_REV.match(piece)
-    if mr:
-        lit = _typed_literal(*mr.group(1, 2, 3))
-        if lit is None:
-            return []
-        return [(mr.group(5).rstrip("."), mr.group(6),
-                 _FLIP_OP[mr.group(4)], lit)]
-    mb = _BETWEEN_CONJ.match(piece)
-    if mb:
-        qual = mb.group(1).rstrip(".")
-        col = mb.group(2)
-        lo = _typed_literal(*mb.group(3, 4, 5))
-        hi = _typed_literal(*mb.group(6, 7, 8))
-        out = []
-        if lo is not None:
-            out.append((qual, col, ">=", lo))
-        if hi is not None:
-            out.append((qual, col, "<=", hi))
-        return out
-    mn = _NULL_CONJ.match(piece)
-    if mn:
-        op = "notnull" if mn.group(3) else "isnull"
-        return [(mn.group(1).rstrip("."), mn.group(2), op, None)]
-    mi = _IN_CONJ.match(piece)
-    if mi:
-        lits = []
-        for lm in _LITERAL_ONE.finditer(mi.group(3)):
-            lit = _typed_literal(*lm.group(1, 2, 3))
-            if lit is None:
-                return []
-            lits.append(lit)
-        if lits:
-            return [(mi.group(1).rstrip("."), mi.group(2), "in",
-                     tuple(lits))]
-    return []
-
-
-def simple_where_conjuncts(predicate: str) -> list[tuple]:
+def simple_where_conjuncts(spark, predicate: str) -> list[tuple]:
     """[(col, op, literal)] planning hints from a bare DML predicate
-    (DELETE/UPDATE ... WHERE body — ONE relation by construction, no
-    SELECT wrapper): top-level AND of the same simple shapes
-    `extract_prune_conjuncts` credits, typed literals included.
+    (the DELETE/UPDATE WHERE body of ONE table), read from Spark's
+    parse of it with the shapes `extract_prune_conjuncts` credits.
     Qualified references are skipped (a DML predicate has no alias to
-    vouch for); a top-level OR yields [] (no piece is a conjunct of a
-    disjunction). Always sound — the full predicate still executes on
-    the kept files; these only shrink the file list."""
-    masked = _mask_quoted(predicate)
-    if _text_unreadable(predicate, masked):
+    vouch for them); a predicate Spark cannot parse gives none."""
+    try:
+        return [(parts[0], op, lit)
+                for member in _and_members(_expression(spark, predicate))
+                for parts, op, lit in _conjunct(member, predicate)
+                if len(parts) == 1]
+    except Exception:
         return []
-    merged = _split_conjunct_pieces(predicate, masked)
-    if merged is None:
-        return []
-    out: list[tuple] = []
-    for piece in merged:
-        for qual, col, op, lit in _piece_conjuncts(piece):
-            if qual:
+
+
+def equi_key_pairs(spark, on_cond: str, target_alias: str,
+                   source_alias: str) -> list[tuple[str, str]]:
+    """(target col, source col) for each top-level AND member of a
+    MERGE ON condition that is `t.a = s.b` either way round, read from
+    Spark's parse of it: the keys whose source bounds file-skip the
+    MERGE discovery scan. A subset of the conjuncts over-approximates
+    the matches, so it is sound; a top-level OR, or a condition Spark
+    cannot parse, gives none."""
+    side = {target_alias.lower(): 0, source_alias.lower(): 1}
+    pairs = []
+    try:
+        for expr in _and_members(_expression(spark, on_cond)):
+            if _kind(expr) != "EqualTo":
                 continue
-            out.append((col, op, lit))
-    return out
+            names = [_name(k["nameParts"], on_cond)
+                     if _kind(k) == "UnresolvedAttribute" else None
+                     for k in expr["_kids"]]
+            if all(n and len(n) == 2 for n in names):
+                cols = {side.get(q.lower()): c for q, c in names}
+                if set(cols) == {0, 1}:
+                    pairs.append((cols[0], cols[1]))
+    except Exception:
+        return []
+    return pairs
+
+
+def _names_a_chain(tree: list) -> bool:
+    """True when a column or star is qualified by a `lightning.` chain,
+    or a named WINDOW (whose definitions toJSON leaves out) may be."""
+    for node in _nodes(tree):
+        kind = _kind(node)
+        name = (node.get("nameParts") if kind == "UnresolvedAttribute"
+                else node.get("target") if kind == "UnresolvedStar"
+                else None)
+        if (kind == "WithWindowDefinition"
+                or (name and name.lower().startswith("[lightning, "))):
+            return True
+    return False
 
 
 def _path_fingerprint(path: str) -> Optional[tuple]:
@@ -482,11 +413,14 @@ def _time_travel(node) -> tuple:
 
 
 class Resolver:
-    def __init__(self, spark, metastore, current_user: Optional[str] = None):
+    def __init__(self, spark, metastore, current_user: Optional[str] = None,
+                 jdbc_pushdown: bool = False):
         self.spark = spark
         self.metastore = metastore
         # identity for @AccessControl enforcement; None disables checks
         self.current_user = current_user
+        # ship single-JDBC-source queries to the source (`_jdbc_pushdown`)
+        self.jdbc_pushdown = jdbc_pushdown
         # (datasource identity, residual) -> (path fingerprint, DataFrame).
         # Repeat queries against the same file table skip the unit's
         # load: for parquet one footer read on the driver plus Spark's
@@ -501,70 +435,38 @@ class Resolver:
 
     # -- public -------------------------------------------------------------
 
-    def try_single_jdbc_pushdown(self, sql: str):
-        """When EVERY table a query touches lives in the SAME JDBC
-        datasource, ship the whole query to the source as
-        `dbtable=(query)` — the federation optimization the reference
-        lacks (SURVEY §4: JDBC sources otherwise scan whole tables minus
-        pushed filters). Returns a DataFrame or None when not applicable.
-
-        Applicability guard: a SELECT/WITH whose relations are all
-        lightning.* chains (no time travel) of one JDBC datasource,
-        found from the metastore alone; each chain becomes its name in
-        the source. The pushed text runs in the REMOTE dialect, so
-        Spark-only functions make it inapplicable.
-        """
-        head = sql.lstrip().split(None, 1)
-        if not head or head[0].upper() not in ("SELECT", "WITH"):
-            return None
-        rels = self._parse(sql)[2]
-        target = None  # (DataSource key, DataSource)
-        edits = []
-        for r in rels:
-            if (not _is_lightning(r.parts) or r.tt is not None
-                    or r.parts[1].lower() != DATASOURCE_ROOT):
-                return None
-            hit = self.metastore.find_parent_datasource(list(r.parts[2:]))
-            if hit is None:
-                return None
-            ds, residual = hit
-            if ds.source_type != "JDBC" or not residual:
-                return None
-            key = (tuple(ds.namespace), ds.name)
-            if target is None:
-                target = (key, ds)
-            elif target[0] != key:
-                return None  # spans two sources -> federate via Spark
-            edits.append((r.start, r.stop, ".".join(residual)))
-        if target is None:
-            return None
-        opts = dict(target[1].options)
-        opts["dbtable"] = f"({_splice(sql, edits, escape=str)}) pushed_q"
-        return self.spark.read.format("jdbc").options(**opts).load()
-
     def resolve_sql(self, sql: str,
                     _stack: frozenset = frozenset()) -> DataFrame:
         """Analyse ``sql`` with every lightning.* relation resolved to
         a `{tN}` placeholder of `sql_with_views(spark, template, **dfs)`.
-        Simple WHERE conjuncts of plain (possibly joined) relations
-        reach the Delta/Iceberg units as file-skipping hints
-        (`extract_prune_conjuncts` documents the soundness guards);
-        Catalyst still applies the full predicate to the kept files."""
+        One parse serves everything: the relations, the JDBC pushdown
+        check of a top-level query, the file-skipping hints that the
+        Delta/Iceberg units get from simple WHERE conjuncts
+        (`extract_prune_conjuncts` reads them from the plan's JSON form
+        and documents the soundness rules), and whether any column is
+        qualified by a full chain. Catalyst still applies the full
+        predicate to the kept files."""
         if "lightning" not in sql.lower():
             return self.spark.sql(sql)
-        root, plan, rels = self._parse(sql)
-        rels = [r for r in rels if _is_lightning(r.parts)]
+        root, plan, all_rels = self._parse(sql)
+        rels = [r for r in all_rels if _is_lightning(r.parts)]
         if not rels:
             return self.spark.sql(sql)
         if (root.nodeName() == "CreateViewCommand"
                 and root.viewType().toString() != "PersistedView"):
             return self._create_temp_view(root, _stack)
-        prune_hit = extract_prune_conjuncts(sql) or {}
+        if self.jdbc_pushdown and not _stack:
+            pushed = self._jdbc_pushdown(sql, all_rels)
+            if pushed is not None:
+                return pushed
+        tree = _plan_tree(plan)
+        prune_hit = (extract_prune_conjuncts(tree, rels, sql)
+                     if tree else None) or {}
         dfs: dict = {}
         placeholder: dict = {}  # (parts, tt, prune) -> "tN"
         edits = []
         for r in rels:
-            prune = None if r.tt else prune_hit.get(sql[r.start:r.stop])
+            prune = None if r.tt else prune_hit.get(".".join(r.parts))
             key = (tuple(p.lower() for p in r.parts), r.tt, repr(prune))
             if key not in placeholder:
                 name = placeholder[key] = f"t{len(placeholder)}"
@@ -576,7 +478,7 @@ class Resolver:
                         f"cannot resolve {sql[r.start:r.stop]!r}: {e}"
                     ) from e
             edits.append((r.start, r.stop, "{" + placeholder[key] + "}"))
-        if len(_MENTION.findall(sql)) > len(rels):
+        if tree is None or _names_a_chain(tree):
             by_parts = {k[0]: v for k, v in placeholder.items()}
             edits += self._chain_column_edits(plan, by_parts)
         return sql_with_views(self.spark, _splice(sql, edits), **dfs)
@@ -624,6 +526,46 @@ class Resolver:
                 _parts(rel.multipartIdentifier()),
                 _time_travel(node) if timed else None))
         return root, plan, sorted(rels)
+
+    def _jdbc_pushdown(self, sql: str, rels: list):
+        """When EVERY table a query touches lives in the SAME JDBC
+        datasource, ship the whole query to the source as
+        `dbtable=(query)` — the federation optimization the reference
+        lacks (SURVEY §4: JDBC sources otherwise scan whole tables minus
+        pushed filters). Returns a DataFrame or None when not applicable.
+
+        Applicability guard: a SELECT/WITH whose relations (``rels``,
+        from `_parse`) are all lightning.* chains (no time travel) of
+        one JDBC datasource, found from the metastore alone; each chain
+        becomes its name in the source. The pushed text runs in the
+        REMOTE dialect, so Spark-only functions make it inapplicable.
+        """
+        head = sql.lstrip().split(None, 1)
+        if not head or head[0].upper() not in ("SELECT", "WITH"):
+            return None
+        target = None  # (DataSource key, DataSource)
+        edits = []
+        for r in rels:
+            if (not _is_lightning(r.parts) or r.tt is not None
+                    or r.parts[1].lower() != DATASOURCE_ROOT):
+                return None
+            hit = self.metastore.find_parent_datasource(list(r.parts[2:]))
+            if hit is None:
+                return None
+            ds, residual = hit
+            if ds.source_type != "JDBC" or not residual:
+                return None
+            key = (tuple(ds.namespace), ds.name)
+            if target is None:
+                target = (key, ds)
+            elif target[0] != key:
+                return None  # spans two sources -> federate via Spark
+            edits.append((r.start, r.stop, ".".join(residual)))
+        if target is None:
+            return None
+        opts = dict(target[1].options)
+        opts["dbtable"] = f"({_splice(sql, edits, escape=str)}) pushed_q"
+        return self.spark.read.format("jdbc").options(**opts).load()
 
     def _chain_column_edits(self, plan, by_parts: dict) -> list[tuple]:
         """Edits that requalify columns written with a full chain
@@ -766,7 +708,7 @@ class Resolver:
         if src and src[0].lower() == "lightning":
             src = src[1:]
         df = self.load_table(src)
-        schema = StructType.fromJson(__import__("json").loads(t.schema_json))
+        schema = StructType.fromJson(json.loads(t.schema_json))
         cols = []
         for f_ in schema.fields:
             if f_.name not in df.columns:

@@ -59,6 +59,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lightning_metastore_spark.catalog.resolver import (
+    equi_key_pairs,
+    simple_where_conjuncts,
+)
+
 
 class DeltaLogError(Exception):
     pass
@@ -938,7 +943,10 @@ def _ts_utc_naive(value, session_tz: Optional[str], ntz: bool):
     (Spark's cast semantics) and compare against UTC stats, so they
     convert through ``session_tz`` — no session zone, no pruning.
     TIMESTAMP_NTZ is naive-vs-naive (zone-free); an offset-carrying
-    literal against an ntz column is refused."""
+    literal against an ntz column is refused. A wall clock the session
+    zone repeats (DST fall-back) names two instants and is refused for
+    both column types: Spark compares an ntz column with a TIMESTAMP
+    literal as instants in that zone."""
     import datetime as dt
     if isinstance(value, str):
         s = value.strip()
@@ -952,14 +960,19 @@ def _ts_utc_naive(value, session_tz: Optional[str], ntz: bool):
         b = value
     else:
         return None
+    if b.tzinfo is not None:
+        return None if ntz else b.astimezone(dt.timezone.utc).replace(
+            tzinfo=None)
+    tzi = session_tzinfo(session_tz)
+    local = None if tzi is None else b.replace(tzinfo=tzi)
+    if local is not None and local.utcoffset() != local.replace(
+            fold=1).utcoffset():
+        return None
     if ntz:
-        return b if b.tzinfo is None else None
-    if b.tzinfo is None:
-        tzi = session_tzinfo(session_tz)
-        if tzi is None:
-            return None
-        b = b.replace(tzinfo=tzi)
-    return b.astimezone(dt.timezone.utc).replace(tzinfo=None)
+        return b
+    if local is None:
+        return None
+    return local.astimezone(dt.timezone.utc).replace(tzinfo=None)
 
 
 def _prune_cmp_value(raw, dt_type: T.DataType):
@@ -2338,19 +2351,6 @@ def write_delta(df: DataFrame, path: str, mode: str = "append",
         write_checkpoint(spark, path)
 
 
-def _dml_prune_conjuncts(predicate: str) -> list[tuple]:
-    """Planning hints from a DML predicate: the resolver's shared
-    conjunct machinery (r17 — previously a one-conjunct regex), so
-    DELETE/UPDATE file-skip on top-level ANDs of simple shapes,
-    BETWEEN, IN, IS [NOT] NULL, reversed spellings, and typed
-    DATE/TIMESTAMP literals, exactly like routed SELECTs. Lazy import
-    (resolver pulls catalog.units at module load)."""
-    from lightning_metastore_spark.catalog.resolver import (
-        simple_where_conjuncts,
-    )
-    return simple_where_conjuncts(predicate)
-
-
 # legacy minWriterVersion implications, CUMULATIVE per the
 # table-features spec — shared by every legacy->v7 protocol upgrade
 _LEGACY_WRITER_FEATS = {
@@ -2569,7 +2569,7 @@ def delete_where(spark: SparkSession, path: str,
     # provably contain no matching row; non-simple predicates scan
     # everything, as before.
     scan_subset = None
-    conjs = _dml_prune_conjuncts(predicate)
+    conjs = simple_where_conjuncts(spark, predicate)
     if conjs:
         scan_subset = prune_snapshot_files(
             snap, conjs,
@@ -2865,7 +2865,7 @@ def update_where(spark: SparkSession, path: str,
 
     scan_subset = None
     if predicate is not None:
-        conjs = _dml_prune_conjuncts(predicate)
+        conjs = simple_where_conjuncts(spark, predicate)
         if conjs:
             scan_subset = prune_snapshot_files(
                 snap, conjs,
@@ -3116,7 +3116,7 @@ def merge_into_delta(spark: SparkSession, path: str,
     # clauses every target row must be examined, so no prune.
     disc_subset = None
     if not sc:
-        key_pairs = mcl.equi_key_pairs(on_cond, ta, sa)
+        key_pairs = equi_key_pairs(spark, on_cond, ta, sa)
         if key_pairs:
             conjs = mcl.source_prune_conjuncts(src, key_pairs)
             if conjs:

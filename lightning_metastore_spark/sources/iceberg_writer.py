@@ -50,6 +50,10 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lightning_metastore_spark.catalog.resolver import (
+    equi_key_pairs,
+    simple_where_conjuncts,
+)
 from lightning_metastore_spark.sources import avro_codec as ac
 from lightning_metastore_spark.sources import iceberg_reader as ir
 
@@ -1232,17 +1236,14 @@ def remove_orphan_files(spark: SparkSession, table_path: str,
 
 def _dml_prune_subset(spark, table_path: str,
                       predicate: str) -> Optional[set]:
-    """Manifest-bounds prune set for a DML predicate via the
-    resolver's shared conjunct machinery (r17 — previously a
-    one-conjunct regex): top-level ANDs, BETWEEN, IN, IS [NOT] NULL,
-    reversed spellings, typed literals. Each conjunct prunes
-    independently (intersection of candidates); any conjunct the
-    bounds reader rejects is skipped — always sound."""
-    from lightning_metastore_spark.catalog.resolver import (
-        simple_where_conjuncts,
-    )
+    """Manifest-bounds prune set for a DML predicate, from the hints
+    `simple_where_conjuncts` reads off Spark's parse of it: top-level
+    ANDs, BETWEEN, IN, IS [NOT] NULL, either operand order, typed
+    literals. Each conjunct prunes independently (intersection of
+    candidates); any conjunct the bounds reader rejects is skipped —
+    always sound."""
     prune_subset = None
-    for col, op, lit in simple_where_conjuncts(predicate):
+    for col, op, lit in simple_where_conjuncts(spark, predicate):
         try:
             cands, skipped = ir.prune_data_files(
                 table_path, col, op, lit,
@@ -2451,7 +2452,7 @@ def merge_into_iceberg(spark: SparkSession, table_path: str,
         # BY SOURCE clauses must examine every target row — no prune
         disc_prune = None
         if not sc:
-            key_pairs = mcl.equi_key_pairs(on_cond, ta, sa)
+            key_pairs = equi_key_pairs(spark, on_cond, ta, sa)
             if key_pairs:
                 disc_prune = (mcl.source_prune_conjuncts(src, key_pairs)
                               or None)

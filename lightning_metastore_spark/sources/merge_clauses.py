@@ -25,7 +25,6 @@ file-table fallback, so the three paths cannot drift.
 
 from __future__ import annotations
 
-import re
 from typing import Optional
 
 from pyspark.sql import Column, functions as F
@@ -33,101 +32,6 @@ from pyspark.sql import Column, functions as F
 
 class MergeClauseError(Exception):
     pass
-
-
-_EQUI_CONJ_RE = re.compile(
-    r"^\s*(?:`([^`]+)`|(\w+))\s*\.\s*(?:`([^`]+)`|(\w+))"
-    r"\s*=\s*"
-    r"(?:`([^`]+)`|(\w+))\s*\.\s*(?:`([^`]+)`|(\w+))\s*$")
-
-
-def _split_top_and(cond: str) -> Optional[list[str]]:
-    """Split on top-level (paren-depth-0, quote-aware) ANDs; None when
-    a top-level OR exists — then NO piece is a conjunct of the whole
-    expression (`x AND y OR z` parses as `(x AND y) OR z`)."""
-    parts, buf, depth, i, n = [], [], 0, 0, len(cond)
-    saw_or = False
-    while i < n:
-        ch = cond[i]
-        if ch in "'\"":
-            q = ch
-            j = i + 1
-            while j < n and cond[j] != q:
-                j += 1
-            buf.append(cond[i:j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0 and ch in "aAoO":
-            word = cond[i:i + 3].upper()
-            before = cond[i - 1] if i else " "
-            if (word == "AND" and not before.isalnum()
-                    and before != "_"
-                    and (i + 3 >= n or not (cond[i + 3].isalnum()
-                                            or cond[i + 3] == "_"))):
-                parts.append("".join(buf))
-                buf = []
-                i += 3
-                continue
-            word2 = cond[i:i + 2].upper()
-            if (word2 == "OR" and not before.isalnum()
-                    and before != "_"
-                    and (i + 2 >= n or not (cond[i + 2].isalnum()
-                                            or cond[i + 2] == "_"))):
-                saw_or = True
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return None if saw_or else parts
-
-
-def equi_key_pairs(on_cond: str, target_alias: str,
-                   source_alias: str) -> list[tuple[str, str]]:
-    """(target_col, source_col) pairs from the top-level equi-join
-    conjuncts of a MERGE ON condition — the handles for file-skipping
-    the discovery scan (source key bounds prune target files whose
-    stats prove no key can match). Pairs are extracted from a SUBSET
-    of conjuncts, which is sound for pruning (it over-approximates
-    the match set); a top-level OR yields [] (no conjunct of the
-    whole expression is certain)."""
-    parts = _split_top_and(on_cond)
-    if parts is None:
-        return []
-    ta, sa = target_alias.lower(), source_alias.lower()
-    pairs = []
-    for p in parts:
-        # strip one level of wrapping parens: `(t.id = s.id)` — only
-        # when the opening paren really matches the closing one
-        q = p.strip()
-        while q.startswith("(") and q.endswith(")"):
-            depth = 0
-            wraps = True
-            for k, ch in enumerate(q):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0 and k != len(q) - 1:
-                        wraps = False
-                        break
-            if not wraps or depth != 0:
-                break
-            q = q[1:-1].strip()
-        m = _EQUI_CONJ_RE.match(q)
-        if not m:
-            continue
-        la = (m.group(1) or m.group(2)).lower()
-        lc = m.group(3) or m.group(4)
-        ra = (m.group(5) or m.group(6)).lower()
-        rc = m.group(7) or m.group(8)
-        if la == ta and ra == sa:
-            pairs.append((lc, rc))
-        elif la == sa and ra == ta:
-            pairs.append((rc, lc))
-    return pairs
 
 
 def source_prune_conjuncts(src, pairs: list[tuple[str, str]],

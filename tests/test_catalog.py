@@ -434,6 +434,37 @@ def test_chain_column_case_insensitive(ctx):
     assert len(rows) == 1 and rows[0].k is not None
 
 
+def test_chain_in_literal_skips_column_walk(ctx, spark, monkeypatch):
+    """Whether a column is qualified by a full chain is read from the
+    parsed plan: a chain inside a string literal or a comment returns
+    the same rows and takes no per-leaf walk; a chain-qualified column
+    still does."""
+    from lightning_metastore_spark.catalog.resolver import Resolver
+
+    ctx.sql("CREATE NAMESPACE lightning.datasource.file")
+    ctx.sql(f"REGISTER PARQUET DATASOURCE tpch OPTIONS(path '{SF_DIR}') "
+            f"NAMESPACE lightning.datasource.file")
+    calls = []
+    walk = Resolver._chain_column_edits
+
+    def counted(self, *args):
+        calls.append(1)
+        return walk(self, *args)
+
+    monkeypatch.setattr(Resolver, "_chain_column_edits", counted)
+    t = "lightning.datasource.file.tpch.region"
+    want = sorted(r.r_name for r in
+                  spark.read.parquet(f"{SF_DIR}/region.parquet").collect())
+    rows = ctx.sql(f"SELECT r_name FROM {t} "
+                   "WHERE r_name <> 'lightning.datasource.x' "
+                   "-- lightning.datasource.y\n").collect()
+    assert sorted(r.r_name for r in rows) == want
+    assert calls == []
+    rows = ctx.sql(f"SELECT {t}.r_name FROM {t}").collect()
+    assert sorted(r.r_name for r in rows) == want
+    assert calls == [1]
+
+
 def test_schema_drift_report(ctx, spark, tmp_path):
     """Snapshot a source, evolve the source schema, and get per-column
     drift rows with the upcast verdict of the ACTIVATE lattice."""

@@ -3493,7 +3493,6 @@ def test_resolver_prune_wiring(spark, tmp_path):
     query scans ONE file of a 4-file table on BOTH formats — while
     joins/subqueries/ORs stay unpruned and results are unchanged."""
     from lightning_metastore_spark.catalog.resolver import (
-        extract_prune_conjuncts,
         simple_where_conjuncts,
     )
     from lightning_metastore_spark.context import LightningContext
@@ -3539,21 +3538,21 @@ def test_resolver_prune_wiring(spark, tmp_path):
         == [0, 1, 35, 36, 37, 38, 39]
 
     # extraction guards: self-joins and subqueries disable pruning
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} a JOIN {t} b ON a.id = b.id "
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} a JOIN {t} b ON a.id = b.id "
         f"WHERE a.id = 1") is None
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE id IN (SELECT id FROM {t})") is None
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE id = 1 OR id = 2") is None
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE id IN (SELECT id FROM {t})") is None
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE id = 1 OR id = 2") is None
     # the r15 ADVICE precedence edge: `a AND b OR c` is a DISJUNCTION
     # — no AND-split piece is a conjunct, in either operand order
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE id = 1 AND v = 2 OR s = 'z'") is None
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE s = 'z' OR id = 1 AND v = 2") is None
-    got = extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE id >= 3 AND (v = 1 OR v = 2) "
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE id = 1 AND v = 2 OR s = 'z'") is None
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE s = 'z' OR id = 1 AND v = 2") is None
+    got = _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE id >= 3 AND (v = 1 OR v = 2) "
         f"AND s = 'a''b'")
     assert got == {t: [("id", ">=", 3), ("s", "=", "a'b")]}
 
@@ -3561,8 +3560,8 @@ def test_resolver_prune_wiring(spark, tmp_path):
     # alias-qualified conjuncts; unqualified conjuncts credit nothing
     # in a multi-relation FROM
     it2 = "lightning.datasource.iceberg.w.acc"
-    got = extract_prune_conjuncts(
-        f"SELECT * FROM {t} f JOIN {it2} d ON f.id = d.id "
+    got = _prune_hints(
+        spark, f"SELECT * FROM {t} f JOIN {it2} d ON f.id = d.id "
         f"WHERE f.id >= 35 AND d.v = 2.0 AND x = 1")
     assert got == {t: [("id", ">=", 35)], it2: [("v", "=", 2.0)]}
 
@@ -3588,10 +3587,205 @@ def test_resolver_prune_wiring(spark, tmp_path):
     # nor is an AND hidden in a string with a backslash escape: this
     # predicate is `s <> <one literal>`, true on every row of 4 files
     pred = "s <> 'a\\' AND id >= 35 AND s <> \\'b'"
-    assert simple_where_conjuncts(pred) == []
+    assert simple_where_conjuncts(spark, pred) == []
     assert ctx.sql(f"DELETE FROM {t} WHERE {pred}").collect()[0] \
         .n_deleted == 40
     assert ctx.sql(f"SELECT count(*) AS n FROM {t}").collect()[0].n == 0
+
+
+def _prune_tables(spark, tmp_path):
+    """A context over a 4-file Delta table and a 4-file Iceberg table
+    holding the same 40 rows (ids 0..39, one block of 10 per file),
+    plus {format: (chain, path, unpruned reader)}. File 1 holds every
+    NULL of `nv`; `ts` steps 15 min from 2024-11-03 04:00 UTC, across
+    America/New_York's DST fall-back; `sd` spells dates loosely."""
+    from lightning_metastore_spark.sources.iceberg_writer import (
+        write_iceberg,
+    )
+
+    def block(lo):
+        return spark.range(lo, lo + 10).selectExpr(
+            "id", "CAST(id AS STRING) AS s", "id * 2 AS v",
+            "IF(id BETWEEN 10 AND 19, NULL, id) AS nv",
+            "date_add(DATE'2024-01-01', CAST(id AS INT)) AS d",
+            "concat('2024-1-', id % 28 + 1) AS sd",
+            "timestamp_seconds(1730606400 + id * 900) AS ts",
+            "CAST(timestamp_seconds(1730606400 + id * 900) "
+            "AS TIMESTAMP_NTZ) AS n").coalesce(1)
+
+    dbase, wh = tmp_path / "pd", tmp_path / "pw"
+    dbase.mkdir()
+    wh.mkdir()
+    for lo in (0, 10, 20, 30):
+        write_delta(block(lo), str(dbase / "ev"), mode="append")
+        write_iceberg(block(lo), str(wh / "acc"),
+                      mode="append" if lo else "error")
+    ctx = LightningContext(spark, warehouse=str(tmp_path / "model"))
+    ctx.sql("CREATE NAMESPACE lightning.datasource.delta")
+    ctx.sql(f"REGISTER DELTA DATASOURCE d OPTIONS(path '{dbase}') "
+            "NAMESPACE lightning.datasource.delta")
+    ctx.sql("CREATE NAMESPACE lightning.datasource.iceberg")
+    ctx.sql(f"REGISTER ICEBERG DATASOURCE w OPTIONS(warehouse '{wh}') "
+            "NAMESPACE lightning.datasource.iceberg")
+    return ctx, {
+        "delta": ("lightning.datasource.delta.d.ev", str(dbase / "ev"),
+                  read_delta),
+        "iceberg": ("lightning.datasource.iceberg.w.acc",
+                    str(wh / "acc"), read_iceberg),
+    }
+
+
+def test_resolver_prune_follows_spark_parse(spark, tmp_path, monkeypatch):
+    """Hints come from Spark's parse, not from the text: a comment
+    after a real conjunct, a backticked chain, and a DML literal with a
+    `\\'` escape no longer switch file skipping off. Each pruned read or
+    delete returns what the unpruned one does, on Delta and Iceberg."""
+    import lightning_metastore_spark.sources.delta_reader as dr
+    import lightning_metastore_spark.sources.iceberg_writer as iw
+
+    ctx, tables = _prune_tables(spark, tmp_path)
+    for chain, path, read in tables.values():
+        want = sorted(r.id for r in read(spark, path).where("id >= 35")
+                      .collect())
+        quoted = ".".join(f"`{p}`" for p in chain.split("."))
+        for q in (f"SELECT id FROM {chain} WHERE id >= 35 -- OR v < 0",
+                  f"SELECT id FROM {chain} WHERE id >= 35 /* OR v < 0 */",
+                  f"SELECT id FROM {quoted} WHERE id >= 35"):
+            df = ctx.sql(q)
+            assert len(df.inputFiles()) == 1, q
+            assert sorted(r.id for r in df.collect()) == want, q
+
+    subsets = []
+    scan = dr._snapshot_scan
+
+    def spy_scan(*a, file_subset=None, **kw):
+        if kw.get("file_tag") == "__delta_file":
+            subsets.append(file_subset)
+        return scan(*a, file_subset=file_subset, **kw)
+
+    prune_subset = iw._dml_prune_subset
+
+    def spy_subset(*a):
+        subsets.append(prune_subset(*a))
+        return subsets[-1]
+
+    monkeypatch.setattr(dr, "_snapshot_scan", spy_scan)
+    monkeypatch.setattr(iw, "_dml_prune_subset", spy_subset)
+    pred = "s <> 'a\\'b' AND id >= 35"
+    for chain, path, read in tables.values():
+        keep = sorted(r.id for r in read(spark, path)
+                      .where(f"NOT ({pred})").collect())
+        subsets.clear()
+        n = ctx.sql(f"DELETE FROM {chain} WHERE {pred}").collect()[0]
+        assert n.n_deleted == 40 - len(keep) == 5
+        assert subsets and subsets[0] is not None and len(subsets[0]) == 1
+        assert sorted(r.id for r in read(spark, path).collect()) == keep
+
+
+# WHERE shapes whose routed rows must equal an unpruned read's: {a} and
+# {b} are two tables of different formats, {aq} is {a} with every part
+# backticked, `side` is a view with one column named `t, id`
+_DIFF_SHAPES = [
+    # the shapes of the prune tests above and below
+    "SELECT id, v FROM {a} WHERE id >= 35 AND s <> 'x'",
+    "SELECT id FROM {a} WHERE id = 7",
+    "SELECT t.id FROM {a} t WHERE t.id >= 35",
+    "SELECT id FROM {a} WHERE id >= 35 OR id < 2",
+    "SELECT id FROM {a} WHERE id >= 3 AND (v = 1 OR v = 2) AND s = 'a''b'",
+    "SELECT id FROM {a} WHERE id = 1 AND v = 2 OR s = '5'",
+    "SELECT id FROM {a} WHERE s = '5' OR id = 1 AND v = 2",
+    "SELECT id FROM {a} WHERE id BETWEEN 12 AND 17",
+    "SELECT id FROM {a} WHERE v >= 0 -- AND id >= 35",
+    "SELECT id FROM {a} WHERE v >= 0 /* AND id >= 35 */",
+    "SELECT id FROM {a} WHERE id >= 35 -- AND v < 0\n",
+    "SELECT id FROM {a} WHERE (v BETWEEN id AND 40) AND id = 4",
+    "SELECT id FROM {a} WHERE v NOT BETWEEN 2 AND 60 AND id >= 1",
+    "SELECT id FROM {a} WHERE 35 < id",
+    "SELECT id FROM {a} WHERE d = DATE '2024-01-06'",
+    "SELECT id FROM {a} WHERE nv IS NULL AND id IN (12, 14)",
+    "SELECT id FROM {a} WHERE nv IS NOT NULL AND id IN (3, 15, 25)",
+    "SELECT a1.id FROM {a} a1 JOIN {a} a2 ON a1.id = a2.id WHERE a1.id = 1",
+    "SELECT id FROM {a} WHERE id IN (SELECT id FROM {a} WHERE id > 30) "
+    "AND id < 33",
+    "SELECT id FROM {aq} WHERE id = 21",
+    "SELECT id FROM {a} WHERE {a}.id = 17",
+    "SELECT id FROM {a} WHERE s <> 'lightning.datasource.x' AND id = 9",
+    "SELECT f.id, g.v FROM {a} f JOIN {b} g ON f.id = g.id "
+    "WHERE f.id >= 35 AND g.v = 72",
+    # outer joins: null-rejecting conjuncts credit, IS NULL does not
+    "SELECT f.id, g.id AS gid FROM {a} f LEFT JOIN {b} g "
+    "ON f.id = g.id + 30 WHERE g.id >= 5",
+    "SELECT f.id FROM {a} f LEFT JOIN {b} g ON f.id = g.id + 30 "
+    "WHERE g.id IS NULL AND f.id >= 25",
+    "SELECT f.id, g.id AS gid FROM {a} f FULL JOIN {b} g "
+    "ON f.id = g.id + 35 WHERE f.id >= 38 AND g.id < 5",
+    "SELECT f.id, g.id AS gid FROM {a} f FULL JOIN {b} g "
+    "ON f.id = g.id + 35 WHERE g.nv IS NULL AND f.id >= 36",
+    "SELECT f.id, g.id AS gid FROM {a} f FULL JOIN {b} g "
+    "ON f.id = g.id + 35 WHERE f.id IS NULL",
+    # CASE, NOT, IN with mixed literal types
+    "SELECT id FROM {a} WHERE CASE WHEN id > 5 AND v < 30 THEN 1 ELSE 0 "
+    "END = 1 AND id = 12",
+    "SELECT id FROM {a} WHERE NOT (id < 35) AND NOT s = '36'",
+    "SELECT id FROM {a} WHERE id IN (1, 2.5, 12)",
+    "SELECT id FROM {a} WHERE id IN ('3', 13)",
+    "SELECT id FROM {a} WHERE s IN ('3', 13, '23')",
+    # DATE literals: a loose spelling, and one against a string column
+    "SELECT id FROM {a} WHERE d = DATE '2024-1-6'",
+    "SELECT id FROM {a} WHERE sd = DATE '2024-01-06'",
+    # TIMESTAMP with an offset (the first one names a wall clock that
+    # America/New_York repeats), TIMESTAMP_NTZ, and both against an
+    # ntz column
+    "SELECT id FROM {a} WHERE ts = TIMESTAMP '2024-11-03 01:30:00-05:00'",
+    "SELECT id FROM {a} WHERE ts >= TIMESTAMP '2024-11-03 12:00:00+02:00'",
+    "SELECT id FROM {a} WHERE ts < TIMESTAMP_NTZ '2024-11-03 01:30:00'",
+    "SELECT id FROM {a} WHERE n <= TIMESTAMP_NTZ '2024-11-03 06:00:00'",
+    "SELECT id FROM {a} WHERE n > TIMESTAMP '2024-11-03 01:30:00'",
+    "SELECT id FROM {a} WHERE n >= TIMESTAMP '2024-11-03 12:00:00+02:00'",
+    # JOIN ... USING, a correlated EXISTS, a CTE body, a union, a
+    # derived table, a HAVING
+    "SELECT id, f.v FROM {a} f JOIN {b} g USING (id) "
+    "WHERE g.id < 4 AND f.s <> '2'",
+    "SELECT f.id FROM {a} f WHERE EXISTS "
+    "(SELECT 1 FROM {b} g WHERE g.id = f.id AND g.v > 70)",
+    "WITH c AS (SELECT id, v FROM {a} WHERE id >= 30) "
+    "SELECT c.id FROM c JOIN c c2 ON c.id = c2.v / 2 WHERE c.id < 36",
+    "SELECT id FROM {a} WHERE id < 3 UNION ALL "
+    "SELECT id FROM {a} WHERE id > 37",
+    "SELECT s2.id FROM (SELECT id FROM {a} WHERE id = 22) s2",
+    "SELECT v, count(*) AS c FROM {a} GROUP BY v HAVING v = 8",
+    # a backticked part holding ", " reads as two name parts
+    "SELECT t.id FROM {a} t CROSS JOIN side WHERE `t, id` = 1",
+]
+
+
+def test_prune_hints_differential(spark, tmp_path):
+    """Every shape in `_DIFF_SHAPES`, routed with file-skipping hints,
+    returns the rows of the same SQL over unpruned reads, with each
+    format as {a}, under America/New_York."""
+    ctx, tables = _prune_tables(spark, tmp_path)
+    for fmt, (chain, path, read) in tables.items():
+        read(spark, path).createOrReplaceTempView(f"unpruned_{fmt}")
+    spark.createDataFrame([(1,)], "`t, id` int") \
+        .createOrReplaceTempView("side")
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        for a, b in (("delta", "iceberg"), ("iceberg", "delta")):
+            chain = tables[a][0]
+            routed = {"a": chain, "b": tables[b][0],
+                      "aq": ".".join(f"`{p}`" for p in chain.split("."))}
+            plain = {"a": f"unpruned_{a}", "b": f"unpruned_{b}",
+                     "aq": f"unpruned_{a}"}
+            for shape in _DIFF_SHAPES:
+                got = ctx.sql(shape.format(**routed)).collect()
+                want = spark.sql(shape.format(**plain)).collect()
+                assert sorted(map(repr, got)) == sorted(map(repr, want)), \
+                    (a, shape)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+        for name in ("unpruned_delta", "unpruned_iceberg", "side"):
+            spark.catalog.dropTempView(name)
 
 
 def test_prune_date_literal_vs_string_column(spark, tmp_path):
@@ -4360,55 +4554,63 @@ def test_delta_check_constraints_enforced(spark, tmp_path):
                     pl, mode="append")
 
 
-def test_prune_extraction_between_case_guard(spark):
-    """BETWEEN/CASE carry their own top-level AND tokens. A literal
-    BETWEEN is reconstituted from the split pieces and rewritten to
-    `>= AND <=`; a non-literal BETWEEN consumes exactly its own AND
-    and is ignored; CASE still bails on the whole WHERE (soundness
-    pin)."""
-    import datetime as dt
-
+def _prune_hints(spark, sql):
+    """The file-skipping hints `Resolver.resolve_sql` reads off
+    Spark's parse of ``sql``."""
     from lightning_metastore_spark.catalog.resolver import (
+        Resolver,
+        _plan_tree,
         extract_prune_conjuncts,
     )
+    _root, plan, rels = Resolver(spark, None)._parse(sql)
+    return extract_prune_conjuncts(_plan_tree(plan), rels, sql)
+
+
+def test_prune_extraction_between_case_guard(spark):
+    """BETWEEN and CASE carry AND tokens of their own; the hints follow
+    Spark's parse of them. A literal BETWEEN gives `>=` and `<=`; one
+    with a column bound, a NOT BETWEEN and a CASE give nothing, while
+    their neighbouring conjuncts still do."""
+    import datetime as dt
 
     t = "lightning.datasource.delta.d.ev"
-    # non-literal BETWEEN bound: the merged piece is ignored, no
-    # other conjunct exists -> None
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE v BETWEEN id AND x = 1") is None
+    # non-literal BETWEEN bound, no other conjunct -> None
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE v BETWEEN id AND x = 1") is None
     # literal BETWEEN rewrites; neighbors stay intact in both orders
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE id = 1 AND v BETWEEN 2 AND 3") \
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE id = 1 AND v BETWEEN 2 AND 3") \
         == {t: [("id", "=", 1), ("v", ">=", 2), ("v", "<=", 3)]}
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE v BETWEEN 2 AND 3 AND id = 1") \
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE v BETWEEN 2 AND 3 AND id = 1") \
         == {t: [("v", ">=", 2), ("v", "<=", 3), ("id", "=", 1)]}
-    # parenthesized BETWEEN is a complete piece — no merge, ignored
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE (v BETWEEN id AND w) AND id = 4") \
+    # a BETWEEN over a column bound is ignored
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE (v BETWEEN id AND w) AND id = 4") \
         == {t: [("id", "=", 4)]}
     # NOT BETWEEN never rewrites (the rewrite would invert it)
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE v NOT BETWEEN 2 AND 3 AND id = 1") \
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE v NOT BETWEEN 2 AND 3 AND id = 1") \
         == {t: [("id", "=", 1)]}
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE CASE WHEN a AND b THEN 1 ELSE 0 END "
-        f"= 1 AND id = 2") is None
+    # a CASE conjunct is ignored; the AND inside it splits nothing
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE CASE WHEN a AND b THEN 1 ELSE 0 END "
+        f"= 1 AND id = 2") == {t: [("id", "=", 2)]}
     # plain conjuncts still extract
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE id = 1 AND v >= 2") \
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE id = 1 AND v >= 2") \
         == {t: [("id", "=", 1), ("v", ">=", 2)]}
     # typed literals carry their type instead of dropping it (the
-    # r15 judge's wrong-answer edge #1): DATE '...' -> datetime.date;
-    # a non-canonical spelling skips the conjunct entirely
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE d = DATE '2024-01-01'") \
+    # r15 judge's wrong-answer edge #1): DATE '...' -> datetime.date,
+    # as Spark reads the spelling ('2024-1-1' is the same date)
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE d = DATE '2024-01-01'") \
         == {t: [("d", "=", dt.date(2024, 1, 1))]}
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE d = DATE '2024-1-1'") is None
-    assert extract_prune_conjuncts(
-        f"SELECT * FROM {t} WHERE ts <= TIMESTAMP '2024-01-01 "
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE d = DATE '2024-1-1'") \
+        == {t: [("d", "=", dt.date(2024, 1, 1))]}
+    assert _prune_hints(
+        spark, f"SELECT * FROM {t} WHERE ts <= TIMESTAMP '2024-01-01 "
         f"00:00:00'") \
         == {t: [("ts", "<=", dt.datetime(2024, 1, 1, 0, 0))]}
 
@@ -5768,6 +5970,26 @@ def test_merge_discovery_file_skip(spark, tmp_path, monkeypatch):
     assert len(cands) == 1 and len(skipped) == 3
     got = {r.id: r.v for r in read_iceberg(spark, ip).collect()}
     assert got[35] == 999 and len(got) == 40
+
+
+def test_merge_equi_keys_follow_spark_parse(spark):
+    """MERGE discovery keys are the `t.a = s.b` AND members of Spark's
+    parse of the ON condition: a comment, a quoted AND, parentheses,
+    backticks and either operand order read as Spark reads them; a
+    top-level OR or an unparsable condition gives none."""
+    from lightning_metastore_spark.catalog.resolver import equi_key_pairs
+
+    cases = [
+        ("t.id = s.id -- AND t.v = s.v", [("id", "id")]),
+        ("t.id = s.id /* AND t.v = s.v */ AND s.k = t.k",
+         [("id", "id"), ("k", "k")]),
+        ("(t.id = s.id) AND t.s = 'x AND t.v = s.v'", [("id", "id")]),
+        ("`T`.`id` = s.`id` AND t.v > s.v", [("id", "id")]),
+        ("t.id = s.id OR t.v = s.v", []),
+        ("t.id = s.id AND (", []),
+    ]
+    for cond, want in cases:
+        assert equi_key_pairs(spark, cond, "t", "s") == want, cond
 
 
 def test_mor_position_deletes_sorted(spark, tmp_path):
