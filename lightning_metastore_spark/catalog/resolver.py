@@ -21,7 +21,6 @@ we add cycle detection, which the reference lacks (documented divergence).
 
 from __future__ import annotations
 
-import datetime as dt
 import itertools
 import json
 import os
@@ -31,6 +30,7 @@ from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from lightning_metastore_spark import plan_json as pj
 from lightning_metastore_spark.catalog.units import (
     DeltaCatalogUnit,
     IcebergCatalogUnit,
@@ -42,154 +42,16 @@ from lightning_metastore_spark.model.metastore import (
 )
 from lightning_metastore_spark.session import sql_with_views
 
+
 class ResolutionError(Exception):
     pass
-
-
-# File-skipping hints are read from the JSON form of the plan that
-# Spark's parser produced (`TreeNode.toJSON`): each tree is a pre-order
-# list of nodes, a node's children follow it, and plans or expressions
-# held in fields (subquery plans, CTE bodies) are nested lists. Spark
-# has already decided what a comment, a quote, an escape, BETWEEN,
-# precedence or a typed literal means; the reader only matches shapes.
-_CMP = {"EqualTo": "=", "LessThan": "<", "LessThanOrEqual": "<=",
-        "GreaterThan": ">", "GreaterThanOrEqual": ">="}
-_FLIP_OP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "="}
-
-
-def _kind(node: dict) -> str:
-    return node["class"].rsplit(".", 1)[-1]
-
-
-def _tree(text: str) -> list:
-    """A `toJSON()` string loaded, with every node's children listed
-    under "_kids"."""
-    def nest(value):
-        if isinstance(value, dict):
-            for v in value.values():
-                nest(v)
-        elif isinstance(value, list):
-            for v in value:
-                nest(v)
-            if (value and isinstance(value[0], dict)
-                    and "num-children" in value[0]):
-                it = iter(value)
-
-                def build():
-                    node = next(it)
-                    node["_kids"] = [build()
-                                     for _ in range(node["num-children"])]
-                    return node
-                build()
-    tree = json.loads(text)
-    nest(tree)
-    return tree
-
-
-def _nodes(value):
-    """Every node of a `_tree`, nested plans and expressions included."""
-    if isinstance(value, list):
-        for v in value:
-            yield from _nodes(v)
-    elif isinstance(value, dict):
-        if "class" in value:
-            yield value
-        for k, v in value.items():
-            if k != "_kids":
-                yield from _nodes(v)
-
-
-def _plan_tree(plan) -> Optional[list]:
-    """``plan`` as a `_tree`, or None when Spark cannot render it."""
-    try:
-        return _tree(plan.toJSON())
-    except Exception:
-        return None
-
-
-def _name(rendered: str, sql: str) -> Optional[tuple]:
-    """The parts of a name that toJSON renders as `[a, b, c]`, or None
-    when a quoted part may itself hold ", " (the text then carries two
-    neighbouring pieces joined by it, quote characters doubled)."""
-    parts = tuple(rendered[1:-1].split(", "))
-    for a, b in zip(parts, parts[1:]):
-        if any(f"{a}, {b}".replace(q, q + q) in sql for q in "`\""):
-            return None
-    return parts
-
-
-def _literal(node: dict):
-    """A Literal node as a hint value, else None: an int, a float (a
-    decimal with a fraction, or a double; never a FLOAT, which Spark
-    compares at single precision), a str, a date, or a timestamp as a
-    naive datetime on the session zone's wall clock (as Spark renders
-    it). TIMESTAMP_NTZ, NULL and every other type give none."""
-    if _kind(node) != "Literal" or node["value"] is None:
-        return None
-    v, t = node["value"], node["dataType"]
-    if t in ("integer", "long", "short", "byte"):
-        return int(v)
-    if t == "double" or str(t).startswith("decimal"):
-        return float(v) if "." in v or "E" in v else int(v)
-    if t == "string":
-        return v
-    if t == "date":
-        return dt.date.fromisoformat(v)
-    if t == "timestamp":
-        return dt.datetime.fromisoformat(v)
-    return None
-
-
-def _and_members(expr: dict):
-    if _kind(expr) == "And":
-        for kid in expr["_kids"]:
-            yield from _and_members(kid)
-    else:
-        yield expr
-
-
-def _conjunct(expr: dict, sql: str) -> list[tuple]:
-    """[(name parts, op, literal)] for one AND member: `col <op> lit`
-    either way round, literal BETWEEN (its two bounds), `IS [NOT] NULL`
-    and `IN (lit, ...)`; empty for any other shape."""
-    kind, kids = _kind(expr), expr["_kids"]
-    if kind == "UnresolvedFunction":
-        if expr["nameParts"].lower() != "[between]" or len(kids) != 3:
-            return []
-        terms = [(kids[0], ">=", kids[1]), (kids[0], "<=", kids[2])]
-    elif kind in _CMP:
-        left, right = kids
-        op = _CMP[kind]
-        if _kind(left) == "Literal":
-            left, right, op = right, left, _FLIP_OP[op]
-        terms = [(left, op, right)]
-    elif kind in ("IsNull", "IsNotNull"):
-        terms = [(kids[0], "isnull" if kind == "IsNull" else "notnull",
-                  None)]
-    elif kind == "In":
-        terms = [(kids[0], "in", kids[1:])]
-    else:
-        return []
-    out = []
-    for col, op, lit in terms:
-        parts = (_name(col["nameParts"], sql)
-                 if _kind(col) == "UnresolvedAttribute" else None)
-        if op == "in":
-            value = tuple(_literal(k) for k in lit)
-            ok = all(m is not None for m in value)
-        else:
-            value = None if lit is None else _literal(lit)
-            ok = lit is None or value is not None
-        if parts and ok:
-            out.append((parts, op, value))
-    return out
 
 
 def _leaves(plan: dict) -> Optional[list[tuple]]:
     """[(rendered relation name, alias | None)] when ``plan`` is one
     relation or a tree of Joins over relations, each optionally
     aliased; None for any other shape."""
-    kind = _kind(plan)
+    kind = pj.kind(plan)
     if kind == "Join":
         out = []
         for kid in plan["_kids"]:
@@ -202,7 +64,7 @@ def _leaves(plan: dict) -> Optional[list[tuple]]:
     if kind == "SubqueryAlias":
         alias = plan["identifier"]["name"]
         plan = plan["_kids"][0]
-    if _kind(plan) != "UnresolvedRelation":
+    if pj.kind(plan) != "UnresolvedRelation":
         return None
     return [(plan["multipartIdentifier"], alias)]
 
@@ -211,8 +73,8 @@ def extract_prune_conjuncts(tree: list, rels: list, sql: str
                             ) -> Optional[dict[str, list[tuple]]]:
     """{table chain: [(col, op, literal), ...]} planning hints for the
     Delta/Iceberg units (stats / manifest-bounds file skipping), read
-    from ``tree`` (the `_plan_tree` of ``sql``'s parsed plan) whose
-    relations, in every scope, are ``rels``.
+    from ``tree`` (the `plan_json.plan_tree` of ``sql``'s parsed plan)
+    whose relations, in every scope, are ``rels``.
 
     A conjunct is a top-level AND member of a Filter's condition whose
     child is one relation or a tree of Joins over relations (a WHERE;
@@ -235,8 +97,8 @@ def extract_prune_conjuncts(tree: list, rels: list, sql: str
               and not any(", " in p for p in r.parts)}
     out: dict[str, list[tuple]] = {}
     try:
-        for node in _nodes(tree):
-            if _kind(node) != "Filter":
+        for node in pj.nodes(tree):
+            if pj.kind(node) != "Filter":
                 continue
             leaves = _leaves(node["_kids"][0])
             if leaves is None:
@@ -248,8 +110,8 @@ def extract_prune_conjuncts(tree: list, rels: list, sql: str
                           else {parts[-1:], parts}):
                     owner[q] = -1 if q in owner else i
             single = 0 if len(leaves) == 1 else -1
-            for expr in _and_members(node["condition"][0]):
-                for parts, op, lit in _conjunct(expr, sql):
+            for expr in pj.and_members(node["condition"][0]):
+                for parts, op, lit in pj.conjunct(expr, sql):
                     if op == "isnull" and single < 0:
                         continue
                     qual = tuple(p.lower() for p in parts[:-1])
@@ -263,63 +125,26 @@ def extract_prune_conjuncts(tree: list, rels: list, sql: str
     return out or None
 
 
-def _expression(spark, text: str) -> dict:
-    """The root of Spark's parse of an expression, as a `_tree` node."""
-    return _tree(spark._jsparkSession.sessionState().sqlParser()
-                 .parseExpression(text).toJSON())[0]
-
-
-def simple_where_conjuncts(spark, predicate: str) -> list[tuple]:
-    """[(col, op, literal)] planning hints from a bare DML predicate
-    (the DELETE/UPDATE WHERE body of ONE table), read from Spark's
-    parse of it with the shapes `extract_prune_conjuncts` credits.
-    Qualified references are skipped (a DML predicate has no alias to
-    vouch for them); a predicate Spark cannot parse gives none."""
-    try:
-        return [(parts[0], op, lit)
-                for member in _and_members(_expression(spark, predicate))
-                for parts, op, lit in _conjunct(member, predicate)
-                if len(parts) == 1]
-    except Exception:
-        return []
-
-
-def equi_key_pairs(spark, on_cond: str, target_alias: str,
-                   source_alias: str) -> list[tuple[str, str]]:
-    """(target col, source col) for each top-level AND member of a
-    MERGE ON condition that is `t.a = s.b` either way round, read from
-    Spark's parse of it: the keys whose source bounds file-skip the
-    MERGE discovery scan. A subset of the conjuncts over-approximates
-    the matches, so it is sound; a top-level OR, or a condition Spark
-    cannot parse, gives none."""
-    side = {target_alias.lower(): 0, source_alias.lower(): 1}
-    pairs = []
-    try:
-        for expr in _and_members(_expression(spark, on_cond)):
-            if _kind(expr) != "EqualTo":
-                continue
-            names = [_name(k["nameParts"], on_cond)
-                     if _kind(k) == "UnresolvedAttribute" else None
-                     for k in expr["_kids"]]
-            if all(n and len(n) == 2 for n in names):
-                cols = {side.get(q.lower()): c for q, c in names}
-                if set(cols) == {0, 1}:
-                    pairs.append((cols[0], cols[1]))
-    except Exception:
-        return []
-    return pairs
+# node fields toJSON writes as null that hold no plan and no name
+_PLAIN_NULLS = {"options", "value", "hint", "evalMode", "evalContext",
+                "groupingSetIndexes", "partitionSpec", "data"}
 
 
 def _names_a_chain(tree: list) -> bool:
     """True when a column or star is qualified by a `lightning.` chain,
-    or a named WINDOW (whose definitions toJSON leaves out) may be."""
-    for node in _nodes(tree):
-        kind = _kind(node)
+    or when toJSON left out a field that may hold one: it writes a Map
+    (a named WINDOW's definitions), and any other value it cannot
+    render, as null."""
+    for node in pj.nodes(tree):
+        kind = pj.kind(node)
         name = (node.get("nameParts") if kind == "UnresolvedAttribute"
                 else node.get("target") if kind == "UnresolvedStar"
                 else None)
-        if (kind == "WithWindowDefinition"
-                or (name and name.lower().startswith("[lightning, "))):
+        if name and name.lower().startswith("[lightning, "):
+            return True
+        if any((v is None and k not in _PLAIN_NULLS)
+               or (isinstance(v, list) and None in v)
+               for k, v in node.items()):
             return True
     return False
 
@@ -413,14 +238,11 @@ def _time_travel(node) -> tuple:
 
 
 class Resolver:
-    def __init__(self, spark, metastore, current_user: Optional[str] = None,
-                 jdbc_pushdown: bool = False):
+    def __init__(self, spark, metastore, current_user: Optional[str] = None):
         self.spark = spark
         self.metastore = metastore
         # identity for @AccessControl enforcement; None disables checks
         self.current_user = current_user
-        # ship single-JDBC-source queries to the source (`_jdbc_pushdown`)
-        self.jdbc_pushdown = jdbc_pushdown
         # (datasource identity, residual) -> (path fingerprint, DataFrame).
         # Repeat queries against the same file table skip the unit's
         # load: for parquet one footer read on the driver plus Spark's
@@ -439,13 +261,25 @@ class Resolver:
                     _stack: frozenset = frozenset()) -> DataFrame:
         """Analyse ``sql`` with every lightning.* relation resolved to
         a `{tN}` placeholder of `sql_with_views(spark, template, **dfs)`.
-        One parse serves everything: the relations, the JDBC pushdown
-        check of a top-level query, the file-skipping hints that the
-        Delta/Iceberg units get from simple WHERE conjuncts
-        (`extract_prune_conjuncts` reads them from the plan's JSON form
-        and documents the soundness rules), and whether any column is
-        qualified by a full chain. Catalyst still applies the full
-        predicate to the kept files."""
+        One parse serves everything: the relations, the file-skipping
+        hints that the Delta/Iceberg units get from simple WHERE
+        conjuncts (`extract_prune_conjuncts` reads them from the plan's
+        JSON form and documents the soundness rules), and whether any
+        column is qualified by a full chain. Catalyst still applies the
+        full predicate to the kept files."""
+        return self._resolve(sql, _stack, pushdown=False)
+
+    def resolve_query(self, sql: str) -> DataFrame:
+        """A top-level query under JDBC pushdown: a SELECT/WITH whose
+        tables all live in one JDBC datasource runs at the source
+        (`_jdbc_pushdown`); anything else resolves as `resolve_sql`
+        does, on the same parse. Statement bodies (CTAS, INSERT, MERGE
+        sources, views, USL activations) never come here: they keep
+        Spark's dialect and column names."""
+        return self._resolve(sql, frozenset(), pushdown=True)
+
+    def _resolve(self, sql: str, _stack: frozenset,
+                 pushdown: bool) -> DataFrame:
         if "lightning" not in sql.lower():
             return self.spark.sql(sql)
         root, plan, all_rels = self._parse(sql)
@@ -455,11 +289,11 @@ class Resolver:
         if (root.nodeName() == "CreateViewCommand"
                 and root.viewType().toString() != "PersistedView"):
             return self._create_temp_view(root, _stack)
-        if self.jdbc_pushdown and not _stack:
+        if pushdown:
             pushed = self._jdbc_pushdown(sql, all_rels)
             if pushed is not None:
                 return pushed
-        tree = _plan_tree(plan)
+        tree = pj.plan_tree(plan)
         prune_hit = (extract_prune_conjuncts(tree, rels, sql)
                      if tree else None) or {}
         dfs: dict = {}

@@ -32,22 +32,23 @@ from lightning_metastore_spark.parser.dispatcher import (
 class LightningContext:
     def __init__(self, spark: SparkSession, warehouse: str | None = None,
                  jdbc_pushdown: bool = False, current_user: str | None = None):
-        # jdbc_pushdown is opt-in: single-JDBC-source queries then execute
-        # AT the source, whose dialect may surface different identifier
-        # casing (e.g. Derby uppercases) and only supports ANSI-compatible
-        # text. current_user enables @AccessControl enforcement on USL
-        # tables.
+        # jdbc_pushdown is opt-in: the pushed query runs in the REMOTE
+        # dialect, which may surface different identifier casing (e.g.
+        # Derby uppercases) and only supports ANSI-compatible text.
+        # current_user enables @AccessControl enforcement on USL tables.
         self.spark = spark
         if warehouse is None:
             warehouse = os.path.join(tempfile.gettempdir(), "lightning-model")
         self.metastore = Metastore(warehouse)
-        self.resolver = Resolver(spark, self.metastore,
-                                 current_user=current_user,
-                                 jdbc_pushdown=jdbc_pushdown)
+        self.resolver = Resolver(spark, self.metastore, current_user=current_user)
+        self.jdbc_pushdown = jdbc_pushdown
 
     def sql(self, query: str) -> DataFrame:
         if is_lightning_command(query):
             return parse_command(query).run(self)
+        if self.jdbc_pushdown:
+            # single-JDBC-source queries execute AT the source
+            return self.resolver.resolve_query(query)
         return self.resolver.resolve_sql(query)
 
     def table(self, name: str) -> DataFrame:

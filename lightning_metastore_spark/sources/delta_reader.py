@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lightning_metastore_spark.catalog.resolver import (
+from lightning_metastore_spark.plan_json import (
     equi_key_pairs,
     simple_where_conjuncts,
 )

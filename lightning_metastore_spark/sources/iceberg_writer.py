@@ -50,7 +50,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lightning_metastore_spark.catalog.resolver import (
+from lightning_metastore_spark.plan_json import (
     equi_key_pairs,
     simple_where_conjuncts,
 )

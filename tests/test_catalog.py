@@ -463,6 +463,11 @@ def test_chain_in_literal_skips_column_walk(ctx, spark, monkeypatch):
     rows = ctx.sql(f"SELECT {t}.r_name FROM {t}").collect()
     assert sorted(r.r_name for r in rows) == want
     assert calls == [1]
+    # a chain-qualified column inside a CTE body is seen too
+    rows = ctx.sql(f"WITH c AS (SELECT {t}.r_name AS n FROM {t}) "
+                   "SELECT n FROM c").collect()
+    assert sorted(r.n for r in rows) == want
+    assert calls == [1, 1]
 
 
 def test_schema_drift_report(ctx, spark, tmp_path):

@@ -181,6 +181,34 @@ def test_pushdown_skipped_for_cross_source(ctx, derby_url):
     assert df.collect()[0].n == 5
 
 
+def test_pushdown_only_for_top_level_queries(ctx, derby_url, spark,
+                                             tmp_path):
+    """Pushdown ships top-level queries only: a CTAS over a JDBC source
+    keeps Spark's column names and types whether pushdown is on or off
+    (the pushed query would come back in Derby's upper case)."""
+    sink = tmp_path / "sink"
+    sink.mkdir()
+    ctx.sql("CREATE NAMESPACE lightning.datasource.rdbms")
+    ctx.sql(f"REGISTER JDBC DATASOURCE derbydb OPTIONS(url '{derby_url}') "
+            f"NAMESPACE lightning.datasource.rdbms")
+    ctx.sql("CREATE NAMESPACE lightning.datasource.file")
+    ctx.sql(f"REGISTER PARQUET DATASOURCE sink OPTIONS(path '{sink}') "
+            f"NAMESPACE lightning.datasource.file")
+    pushed = LightningContext(spark, warehouse=str(ctx.metastore.warehouse),
+                              jdbc_pushdown=True)
+    src = "lightning.datasource.rdbms.derbydb.test_users"
+    schemas = []
+    for name, c in (("plain", ctx), ("pushed", pushed)):
+        c.sql(f"CREATE TABLE lightning.datasource.file.sink.{name} AS "
+              f"SELECT uid, jid * 2 AS j2 FROM {src} WHERE uid <= 3")
+        df = ctx.sql(f"SELECT * FROM lightning.datasource.file.sink.{name}")
+        schemas.append(df.schema)
+        assert sorted(tuple(r) for r in df.collect()) == [
+            (1, 2), (2, 4), (3, 6)]
+    assert schemas[0] == schemas[1]
+    assert schemas[0].fieldNames() == ["uid", "j2"]
+
+
 def test_jdbc_write(ctx, derby_url, spark):
     from lightning_metastore_spark.catalog.units import load_catalog_unit
 

@@ -3492,10 +3492,8 @@ def test_resolver_prune_wiring(spark, tmp_path):
     reach the lakehouse units as planning hints — the catalog-routed
     query scans ONE file of a 4-file table on BOTH formats — while
     joins/subqueries/ORs stay unpruned and results are unchanged."""
-    from lightning_metastore_spark.catalog.resolver import (
-        simple_where_conjuncts,
-    )
     from lightning_metastore_spark.context import LightningContext
+    from lightning_metastore_spark.plan_json import simple_where_conjuncts
     from lightning_metastore_spark.sources.iceberg_writer import (
         write_iceberg,
     )
@@ -3543,6 +3541,10 @@ def test_resolver_prune_wiring(spark, tmp_path):
         f"WHERE a.id = 1") is None
     assert _prune_hints(
         spark, f"SELECT * FROM {t} WHERE id IN (SELECT id FROM {t})") is None
+    # a WHERE inside a CTE body gives hints: toJSON renders the body
+    assert _prune_hints(
+        spark, f"WITH c AS (SELECT id FROM {t} WHERE id >= 35) "
+        f"SELECT * FROM c") == {t: [("id", ">=", 35)]}
     assert _prune_hints(
         spark, f"SELECT * FROM {t} WHERE id = 1 OR id = 2") is None
     # the r15 ADVICE precedence edge: `a AND b OR c` is a DISJUNCTION
@@ -4559,11 +4561,11 @@ def _prune_hints(spark, sql):
     Spark's parse of ``sql``."""
     from lightning_metastore_spark.catalog.resolver import (
         Resolver,
-        _plan_tree,
         extract_prune_conjuncts,
     )
+    from lightning_metastore_spark.plan_json import plan_tree
     _root, plan, rels = Resolver(spark, None)._parse(sql)
-    return extract_prune_conjuncts(_plan_tree(plan), rels, sql)
+    return extract_prune_conjuncts(plan_tree(plan), rels, sql)
 
 
 def test_prune_extraction_between_case_guard(spark):
@@ -5977,7 +5979,7 @@ def test_merge_equi_keys_follow_spark_parse(spark):
     parse of the ON condition: a comment, a quoted AND, parentheses,
     backticks and either operand order read as Spark reads them; a
     top-level OR or an unparsable condition gives none."""
-    from lightning_metastore_spark.catalog.resolver import equi_key_pairs
+    from lightning_metastore_spark.plan_json import equi_key_pairs
 
     cases = [
         ("t.id = s.id -- AND t.v = s.v", [("id", "id")]),
