@@ -468,6 +468,11 @@ def test_chain_in_literal_skips_column_walk(ctx, spark, monkeypatch):
                    "SELECT n FROM c").collect()
     assert sorted(r.n for r in rows) == want
     assert calls == [1, 1]
+    # toJSON writes a named WINDOW's specs as null, so the walk runs
+    rows = ctx.sql(f"SELECT r_name, count(*) OVER w AS c FROM {t} "
+                   "WINDOW w AS (PARTITION BY r_regionkey)").collect()
+    assert sorted(r.r_name for r in rows) == want
+    assert calls == [1, 1, 1]
 
 
 def test_schema_drift_report(ctx, spark, tmp_path):
