@@ -410,7 +410,12 @@ class Resolver:
         # a long expression list prints as "... N more fields"
         for node in _tree_nodes(plan, lambda ln: "lightning" in ln.lower()
                                 or "more field" in ln):
-            for expr in _seq(node.expressions()):
+            exprs = _seq(node.expressions())
+            if node.nodeName() == "WithWindowDefinition":
+                # a named WINDOW keeps its specs in a Map, which
+                # `expressions()` does not list
+                exprs += _seq(node.windowDefinitions().values().toSeq())
+            for expr in exprs:
                 for leaf in _seq(expr.collectLeaves()):
                     kind = leaf.nodeName()
                     star = kind == "UnresolvedStar"

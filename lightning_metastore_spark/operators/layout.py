@@ -56,26 +56,19 @@ def write_range_clustered(df: DataFrame, path: str, cols: list[str],
 
 def file_column_ranges(path: str, column: str) -> list[tuple]:
     """Per-file (min, max) of ``column`` from parquet footer statistics
-    — the exact information a reader prunes with. Driver-side metadata
-    read only (no data scan); used to verify clustering quality."""
+    (`file_stats.footer_stats`) — the exact information a reader prunes
+    with. Driver-side metadata read only (no data scan); used to verify
+    clustering quality."""
     import glob
     import os
 
-    import pyarrow.parquet as pq
+    from lightning_metastore_spark.sources.file_stats import footer_stats
 
     out = []
     for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        md = pq.ParquetFile(f).metadata
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == column and col.statistics:
-                    s = col.statistics
-                    lo = s.min if lo is None else min(lo, s.min)
-                    hi = s.max if hi is None else max(hi, s.max)
-        if lo is not None:
-            out.append((lo, hi))
+        c = (footer_stats(f) or (0, {}))[1].get(column)
+        if c is not None and c.lo is not None and c.hi is not None:
+            out.append((c.lo, c.hi))
     return out
 
 

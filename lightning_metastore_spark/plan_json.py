@@ -12,6 +12,7 @@ predicates and MERGE ON conditions.
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 import json
 from typing import Optional
 
@@ -82,18 +83,21 @@ def name_parts(rendered: str, sql: str) -> Optional[tuple]:
 
 
 def literal(node: dict):
-    """A Literal node as a hint value, else None: an int, a float (a
-    decimal with a fraction, or a double; never a FLOAT, which Spark
-    compares at single precision), a str, a date, or a timestamp as a
-    naive datetime on the session zone's wall clock (as Spark renders
-    it). TIMESTAMP_NTZ, NULL and every other type give none."""
+    """A Literal node as a hint value, else None: an int, a Decimal (a
+    decimal such as `10.15`), a float (a double such as `1.015E1`;
+    never a FLOAT, which Spark compares at single precision), a str, a
+    date, or a timestamp as a naive datetime on the session zone's
+    wall clock (as Spark renders it). TIMESTAMP_NTZ, NULL and every
+    other type give none."""
     if kind(node) != "Literal" or node["value"] is None:
         return None
     v, t = node["value"], node["dataType"]
     if t in ("integer", "long", "short", "byte"):
         return int(v)
-    if t == "double" or str(t).startswith("decimal"):
-        return float(v) if "." in v or "E" in v else int(v)
+    if t == "double":
+        return float(v)
+    if str(t).startswith("decimal"):
+        return decimal.Decimal(v)
     if t == "string":
         return v
     if t == "date":

@@ -63,6 +63,13 @@ from lightning_metastore_spark.plan_json import (
     equi_key_pairs,
     simple_where_conjuncts,
 )
+from lightning_metastore_spark.sources.file_stats import (
+    comparable,
+    footer_stats,
+    may_match,
+    session_tzinfo,
+    usable_conjuncts,
+)
 
 
 class DeltaLogError(Exception):
@@ -330,27 +337,6 @@ class DeltaSnapshot:
         self.files = files  # (relative path, partitionValues)
         self.dv = dv or {}  # relative path -> deletionVector descriptor
         self.stats = stats or {}  # relative path -> add.stats JSON str
-
-
-def session_tzinfo(tz: Optional[str]):
-    """tzinfo for a `spark.sql.session.timeZone` value (IANA name or
-    GMT/UTC±offset spelling), or None when it cannot be resolved —
-    callers treat None as "cannot reason about zones" and disable the
-    zone-sensitive optimization."""
-    import datetime as dt
-    if not tz:
-        return None
-    m = re.fullmatch(r"(?:GMT|UTC)?([+-])(\d{1,2})(?::?(\d{2}))?",
-                     str(tz))
-    if m:
-        off = dt.timedelta(hours=int(m.group(2)),
-                           minutes=int(m.group(3) or 0))
-        return dt.timezone(-off if m.group(1) == "-" else off)
-    try:
-        from zoneinfo import ZoneInfo
-        return ZoneInfo(str(tz))
-    except Exception:  # noqa: BLE001 — unknown zone name
-        return None
 
 
 def ts_literal_ms(spark: SparkSession, literal: str) -> int:
@@ -837,8 +823,8 @@ def _can_upcast(src: T.DataType, dst: T.DataType) -> bool:
 def _stats_json_value(v):
     """Parquet-footer stat -> Delta add.stats JSON value (delta-spark's
     conventions: numbers/bools as JSON scalars, dates ISO, timestamps
-    UTC ISO with Z). Returns None for values with no sound JSON bound
-    (binary, decimals, over-long or inexact strings)."""
+    UTC ISO with Z, cut to milliseconds). Returns None for values with
+    no sound JSON bound (binary, decimals, over-long strings)."""
     import datetime as dt
     if isinstance(v, bool) or type(v) in (int, float):
         return v
@@ -856,221 +842,71 @@ def _stats_json_value(v):
 
 def _parquet_stats_json(full_path: str) -> Optional[str]:
     """Delta `add.stats` JSON (numRecords / minValues / maxValues /
-    nullCount, top-level primitive columns) from the parquet footer —
-    a metadata-only pyarrow read, the write-side half of stats-based
+    nullCount, top-level primitive columns) from the parquet footer
+    (`file_stats.footer_stats`), the write-side half of stats-based
     file skipping. Omissions are always sound: a reader treats a
-    missing bound as unknowable. String bounds ride only when the
-    footer marks them exact (a truncated max is NOT an upper bound)."""
-    try:
-        import pyarrow.parquet as pq
-        md = pq.ParquetFile(full_path).metadata
-    except Exception:  # noqa: BLE001 — stats are advisory
+    missing bound as unknowable."""
+    fst = footer_stats(full_path)
+    if fst is None:
         return None
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    no_min: set = set()
-    no_max: set = set()
-    no_nulls: set = set()
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        for j in range(rgm.num_columns):
-            col = rgm.column(j)
-            name = col.path_in_schema
-            if "." in name:
-                continue  # nested leaf — top-level stats only
-            st = col.statistics
-            if st is not None and st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + int(st.null_count)
-            else:
-                no_nulls.add(name)  # partial count would UNDERCOUNT
-            if st is None or not st.has_min_max:
-                no_min.add(name)
-                no_max.add(name)
-                continue
-            mn, mx = st.min, st.max
-            if isinstance(mn, (str, bytes)):
-                # truncated string stats: min stays a valid lower
-                # bound only when exact-marked or short; a truncated
-                # max is NOT an upper bound
-                if getattr(st, "is_min_value_exact", None) is False:
-                    no_min.add(name)
-                if getattr(st, "is_max_value_exact", None) is False:
-                    no_max.add(name)
-            jn = _stats_json_value(mn)
-            jx = _stats_json_value(mx)
-            if jn is None:
-                no_min.add(name)
-            elif name not in no_min:
-                mins[name] = jn if name not in mins else min(mins[name],
-                                                             jn)
-            if jx is None:
-                no_max.add(name)
-            elif name not in no_max:
-                maxs[name] = jx if name not in maxs else max(maxs[name],
-                                                             jx)
-    out = {"numRecords": int(md.num_rows),
-           "minValues": {k: v for k, v in sorted(mins.items())
-                         if k not in no_min},
-           "maxValues": {k: v for k, v in sorted(maxs.items())
-                         if k not in no_max},
-           "nullCount": {k: v for k, v in sorted(nulls.items())
-                         if k not in no_nulls}}
+    rows, cols = fst
+
+    def _side(bound: str) -> dict:
+        out = {}
+        for name, c in sorted(cols.items()):
+            v = _stats_json_value(getattr(c, bound))
+            if v is not None:
+                out[name] = v
+        return out
+    out = {"numRecords": rows,
+           "minValues": _side("lo"),
+           "maxValues": _side("hi"),
+           "nullCount": {k: c.nulls for k, c in sorted(cols.items())
+                         if c.nulls is not None}}
     return json.dumps(out, separators=(",", ":"))
 
 
-# column types stats-based pruning compares on. Timestamps compare as
-# UTC-naive datetimes: stats are UTC per the PROTOCOL, and a
-# timezone-less literal is converted through the SESSION timezone
-# (`_ts_utc_naive`) — the zone mismatch that used to exclude them.
-_PRUNABLE = {"byte", "short", "integer", "long", "float", "double",
-             "boolean", "string", "date", "timestamp", "timestamp_ntz"}
-
-# canonical literal strings only — Spark's string casts accept looser
-# spellings that Python parses differently or not at all; pruning
-# restricts itself to forms both engines agree on (non-canonical
-# forms skip the conjunct — always sound)
-_CANON_DATE_RE = re.compile(r"\d{4}-\d{2}-\d{2}")
-_CANON_TS_RE = re.compile(
-    r"\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}(:\d{2}(\.\d{1,6})?)?)?"
-    r"(Z|[+-]\d{2}:?\d{2})?")
-
-
-def _ts_utc_naive(value, session_tz: Optional[str], ntz: bool):
-    """SQL timestamp literal (canonical string or datetime) -> the
-    comparable naive datetime, or None when the conversion is not
-    sound. TIMESTAMP (tz) literals are wall-clock in the SESSION zone
-    (Spark's cast semantics) and compare against UTC stats, so they
-    convert through ``session_tz`` — no session zone, no pruning.
-    TIMESTAMP_NTZ is naive-vs-naive (zone-free); an offset-carrying
-    literal against an ntz column is refused. A wall clock the session
-    zone repeats (DST fall-back) names two instants and is refused for
-    both column types: Spark compares an ntz column with a TIMESTAMP
-    literal as instants in that zone."""
-    import datetime as dt
-    if isinstance(value, str):
-        s = value.strip()
-        if not _CANON_TS_RE.fullmatch(s):
-            return None
-        try:
-            b = dt.datetime.fromisoformat(s.replace("Z", "+00:00"))
-        except ValueError:
-            return None
-    elif isinstance(value, dt.datetime):
-        b = value
-    else:
-        return None
-    if b.tzinfo is not None:
-        return None if ntz else b.astimezone(dt.timezone.utc).replace(
-            tzinfo=None)
-    tzi = session_tzinfo(session_tz)
-    local = None if tzi is None else b.replace(tzinfo=tzi)
-    if local is not None and local.utcoffset() != local.replace(
-            fold=1).utcoffset():
-        return None
-    if ntz:
-        return b
-    if local is None:
-        return None
-    return local.astimezone(dt.timezone.utc).replace(tzinfo=None)
-
-
-def _prune_cmp_value(raw, dt_type: T.DataType):
-    """A stats JSON value / logged partitionValues string -> the
-    comparable Python value for pruning, or None (unknowable)."""
-    import datetime as dt
-    if raw is None:
-        return None
-    tn = dt_type.typeName()
-    if tn in ("byte", "short", "integer", "long"):
-        return int(raw)
-    if tn in ("float", "double"):
-        return float(raw)
-    if tn == "boolean":
-        return (raw if isinstance(raw, bool)
-                else str(raw).lower() == "true")
-    if tn == "string":
-        return str(raw)
-    if tn == "date":
-        return dt.date.fromisoformat(str(raw))
-    if tn in ("timestamp", "timestamp_ntz"):
-        # stats timestamps are UTC per the PROTOCOL ("...Z"); a
-        # zone-less value is read as UTC too (what spec-violating
-        # writers mean). Comparison side is always UTC-naive.
-        b = dt.datetime.fromisoformat(
-            str(raw).strip().replace("Z", "+00:00"))
-        if b.tzinfo is not None:
-            b = b.astimezone(dt.timezone.utc).replace(tzinfo=None)
-        return b
-    return None
-
-
-def _prune_literal(value, dt_type: T.DataType,
-                   session_tz: Optional[str] = None):
-    """SQL literal -> comparable value through the COLUMN's type, or
-    None when pruning on this (column type, literal) is not sound.
-    A fractional literal against an integral column keeps its
-    fraction — int() truncation would unsoundly skip boundary files —
-    and exact big ints never round-trip through float. TYPED literals
-    (datetime.date from `DATE '...'`, datetime from `TIMESTAMP
-    '...'`) prune ONLY matching column types: `scol = DATE '...'`
-    makes Spark cast the STRING COLUMN to date, so raw string stats
-    are not comparable (the r15 judge's confirmed edge #1)."""
-    import datetime as dt
-    tn = dt_type.typeName()
-    if tn not in _PRUNABLE:
-        return None
-    if isinstance(value, dt.datetime):     # before date: subclass
-        return _ts_utc_naive(value, session_tz,
-                             ntz=(tn == "timestamp_ntz")) \
-            if tn in ("timestamp", "timestamp_ntz") else None
-    if isinstance(value, dt.date):
-        return value if tn == "date" else None
+def _add_stats(raw: Optional[str]) -> dict:
+    """A logged add.stats JSON string parsed (fractions as Decimal, so a
+    decimal column's bound stays exact), or {} when absent or
+    unreadable."""
+    import decimal
     try:
+        st = json.loads(raw or "{}", parse_float=decimal.Decimal)
+    except ValueError:
+        return {}
+    return st if isinstance(st, dict) else {}
+
+
+def _stats_json_bound(raw, dtype: T.DataType):
+    """A logged add.stats value or partition value -> a bound of a
+    ``dtype`` column, or None (unknowable). Stats timestamps are UTC
+    per the PROTOCOL ("...Z"); a zone-less one is read as UTC too
+    (what spec-violating writers mean)."""
+    import datetime as dt
+    import decimal
+    tn = dtype.typeName()
+    try:
+        if raw is None:
+            return None
         if tn in ("byte", "short", "integer", "long"):
-            if isinstance(value, bool) or isinstance(value, str):
-                return None
-            if isinstance(value, int):
-                return value
-            v = float(value)
-            return int(v) if v.is_integer() else v
+            return int(raw)
         if tn in ("float", "double"):
-            return float(value) if not isinstance(value, str) else None
+            return float(raw)
+        if tn == "decimal":
+            return decimal.Decimal(str(raw))
         if tn == "boolean":
-            return None  # =true/false literals don't parse here
+            return (raw if isinstance(raw, bool)
+                    else str(raw).lower() == "true")
         if tn == "string":
-            return str(value) if isinstance(value, str) else None
+            return str(raw)
         if tn == "date":
-            if not (isinstance(value, str)
-                    and _CANON_DATE_RE.fullmatch(value.strip())):
-                return None
-            return dt.date.fromisoformat(value.strip())
+            return dt.date.fromisoformat(str(raw))
         if tn in ("timestamp", "timestamp_ntz"):
-            return _ts_utc_naive(value, session_tz,
-                                 ntz=(tn == "timestamp_ntz"))
-    except (ValueError, TypeError):
+            return comparable(str(raw), T.TimestampType(), "UTC")
+    except (ValueError, TypeError, ArithmeticError):
         return None
     return None
-
-
-def _bounds_admit(op: str, lo, hi, v) -> bool:
-    """Can a row with value in [lo, hi] satisfy `col <op> v`? Missing
-    bounds are unknowable -> True (conservative)."""
-    try:
-        if op == "=":
-            return ((lo is None or lo <= v)
-                    and (hi is None or v <= hi))
-        if op == "<":
-            return lo is None or lo < v
-        if op == "<=":
-            return lo is None or lo <= v
-        if op == ">":
-            return hi is None or hi > v
-        if op == ">=":
-            return hi is None or hi >= v
-    except TypeError:
-        return True  # incomparable -> conservative
-    return True
 
 
 def prune_snapshot_files(snap: DeltaSnapshot,
@@ -1079,125 +915,54 @@ def prune_snapshot_files(snap: DeltaSnapshot,
                          ) -> Optional[set]:
     """Stats-based file skipping: the set of live add.path values that
     can contain rows matching ALL of the simple ``(col, op, literal)``
-    conjuncts — or None when nothing can be skipped. Sound by
-    construction: a file is dropped only when its logged
-    partitionValues or add.stats (numRecords/minValues/maxValues/
-    nullCount) PROVE no row matches; missing/unparseable stats keep
-    the file. Planning-side work O(files) — at 100 TB this is the
-    difference between opening every live footer and opening the few
-    files a selective predicate touches."""
+    conjuncts — or None when nothing can be skipped. Each file's logged
+    partitionValues (a value is both bounds; NULL means every row is
+    NULL) and add.stats become counts and bounds for
+    `file_stats.may_match`; missing or unparseable stats keep the file.
+    Planning-side work O(files) — at 100 TB this is the difference
+    between opening every live footer and opening the few files a
+    selective predicate touches."""
+    import datetime as dt
     if getattr(snap, "physical", None):
         return None  # mapped tables key stats by physical name
-    field_by = {f.name.lower(): f for f in snap.schema.fields}
-    part_cols = set(snap.partition_columns)
-    usable = []
-    for col, op, lit in prune:
-        if op not in ("=", "<", "<=", ">", ">=", "isnull", "notnull",
-                      "in"):
-            continue
-        f = field_by.get(str(col).lower())
-        if f is None:
-            continue
-        if (op not in ("isnull", "notnull")
-                and f.name in part_cols
-                and f.dataType.typeName() in ("timestamp",
-                                              "timestamp_ntz")):
-            # logged partitionValues serialize timestamps WITHOUT a
-            # zone and writers disagree on which one — stats-side
-            # timestamps are spec-UTC, partition values are not
-            # provably so; skip the conjunct for partition columns
-            continue
-        if op in ("isnull", "notnull"):
-            usable.append((f.name, op, None, f.dataType))
-            continue
-        if op == "in":
-            vs = [_prune_literal(m, f.dataType, session_tz)
-                  for m in (lit if isinstance(lit, (list, tuple))
-                            else [lit])]
-            if vs and all(v is not None for v in vs):
-                # subset pruning would drop files the unparsed
-                # members match — all-or-nothing
-                usable.append((f.name, op, tuple(vs), f.dataType))
-            continue
-        v = _prune_literal(lit, f.dataType, session_tz)
-        if v is not None:
-            usable.append((f.name, op, v, f.dataType))
-    if not usable:
+    types = {f.name: f.dataType for f in snap.schema.fields}
+    parts = set(snap.partition_columns)
+    # logged partitionValues serialize timestamps WITHOUT a zone and
+    # writers disagree on which one — stats-side timestamps are
+    # spec-UTC, partition values are not provably so
+    conds = [(c, op, v) for c, op, v in usable_conjuncts(
+                 prune, snap.schema, session_tz)
+             if not (c in parts and op not in ("isnull", "notnull")
+                     and types[c].typeName() in ("timestamp",
+                                                 "timestamp_ntz"))]
+    if not conds:
         return None
-
-    def _admit_bounds(op, lo, hi, v) -> bool:
-        if op == "in":
-            return any(_bounds_admit("=", lo, hi, m) for m in v)
-        return _bounds_admit(op, lo, hi, v)
-
-    part_set = set(snap.partition_columns)
     keep: set = set()
     skipped = False
     for rel, pv in snap.files:
-        parsed = None
-        admit = True
-        for name, op, v, dtp in usable:
-            if name in part_set:
+        st = _add_stats(snap.stats.get(rel))
+        nr = st.get("numRecords")
+
+        def _col(name: str) -> tuple:
+            if name in parts:
                 raw = pv.get(name)
-                if op == "isnull":
-                    if raw is not None:
-                        admit = False  # no row in this file is NULL
-                        break
-                    continue
-                if op == "notnull":
-                    if raw is None:
-                        admit = False  # every row is NULL
-                        break
-                    continue
                 if raw is None:
-                    # every row's value is NULL -> predicate never TRUE
-                    admit = False
-                    break
-                try:
-                    b = _prune_cmp_value(raw, dtp)
-                except (ValueError, TypeError):
-                    continue
-                if b is not None and not _admit_bounds(op, b, b, v):
-                    admit = False
-                    break
-                continue
-            if parsed is None:
-                raw_json = snap.stats.get(rel)
-                if not raw_json:
-                    parsed = {}
-                else:
-                    try:
-                        parsed = json.loads(raw_json)
-                    except ValueError:
-                        parsed = {}
-            if not parsed:
-                continue
-            nr = parsed.get("numRecords")
-            if nr is not None and nr == 0:
-                admit = False  # empty file: no row can match anything
-                break
-            nc = (parsed.get("nullCount") or {}).get(name)
-            if op == "isnull":
-                if nc is not None and nc == 0:
-                    admit = False  # provably no NULL in this file
-                    break
-                continue
-            if nc is not None and nr is not None and nc == nr:
-                admit = False  # all-NULL column: predicate never TRUE
-                break
-            if op == "notnull":
-                continue  # some non-null row may exist -> keep
-            try:
-                lo = _prune_cmp_value(
-                    (parsed.get("minValues") or {}).get(name), dtp)
-                hi = _prune_cmp_value(
-                    (parsed.get("maxValues") or {}).get(name), dtp)
-            except (ValueError, TypeError):
-                continue
-            if not _admit_bounds(op, lo, hi, v):
-                admit = False
-                break
-        if admit:
+                    # every row is NULL (one row stands for an unknown
+                    # count)
+                    n = 1 if nr is None else nr
+                    return n, n, None, None
+                b = _stats_json_bound(raw, types[name])
+                return nr, 0, b, b
+            nc = (st.get("nullCount") or {}).get(name)
+            lo, hi = (_stats_json_bound((st.get(k) or {}).get(name),
+                                        types[name])
+                      for k in ("minValues", "maxValues"))
+            if isinstance(hi, dt.datetime):
+                # stats timestamps are cut to milliseconds, so the
+                # logged max can sit below the column's true max
+                hi += dt.timedelta(milliseconds=1)
+            return nr, nc if isinstance(nc, int) else None, lo, hi
+        if all(may_match(op, v, *_col(c)) for c, op, v in conds):
             keep.add(rel)
         else:
             skipped = True
@@ -3307,13 +3072,7 @@ def merge_into_delta(spark: SparkSession, path: str,
         # log; delete it instead of committing it
         kept = []
         for rel, size, pv, st in staged:
-            n = None
-            if st:
-                try:
-                    n = json.loads(st).get("numRecords")
-                except ValueError:
-                    pass
-            if n == 0:
+            if _add_stats(st).get("numRecords") == 0:
                 try:
                     os.remove(os.path.join(path, rel))
                 except OSError:
@@ -3346,11 +3105,7 @@ def merge_into_delta(spark: SparkSession, path: str,
             stage_i, path, os.path.join(path, f".merge-ins-{now_ms}"),
             stage_partition_by))
         for _rel, _size, _pv, st in imoved:
-            if st:
-                try:
-                    n_inserted += int(json.loads(st)["numRecords"])
-                except (ValueError, KeyError, TypeError):
-                    pass
+            n_inserted += int(_add_stats(st).get("numRecords") or 0)
     _enforce_staged_checks(spark, path, snap.schema,
                            snap.partition_columns,
                            getattr(snap, "configuration", None),
@@ -3415,12 +3170,11 @@ def merge_into_delta(spark: SparkSession, path: str,
     total = 0
     complete = True
     for rel, _pv in new_snap.files:
-        st = new_snap.stats.get(rel)
-        try:
-            total += int(json.loads(st)["numRecords"])
-        except (ValueError, KeyError, TypeError):
+        n = _add_stats(new_snap.stats.get(rel)).get("numRecords")
+        if not isinstance(n, int):
             complete = False
             break
+        total += n
         d = new_snap.dv.get(rel)
         if d is not None:
             # numRecords is the PHYSICAL row count; DV-marked rows

@@ -47,6 +47,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lightning_metastore_spark.sources import avro_codec as ac
+from lightning_metastore_spark.sources.file_stats import (
+    may_match,
+    usable_conjuncts,
+)
 
 
 class IcebergError(Exception):
@@ -194,7 +198,7 @@ def _local(p: str) -> str:
 
 
 def snapshot_files(table_path: str, snapshot: dict,
-                   with_partitions: bool = False
+                   with_partitions: bool = False, admit=None
                    ) -> tuple[list[tuple], list[str], list[tuple]]:
     """Snapshot contents as (data, position_deletes, equality_deletes):
     data = [(path, data_sequence_number)] — or
@@ -204,7 +208,9 @@ def snapshot_files(table_path: str, snapshot: dict,
     sequence_number, equality_ids)]. The sequence number comes from
     the manifest entry, inherited from the manifest-list record when
     the entry omits it (the v2 inheritance rule); absent everywhere
-    (v1) it is None."""
+    (v1) it is None. ``admit``, when given, is called on each data
+    file's manifest record and drops the file when it returns False
+    (file skipping, `_data_file_test`)."""
     mlist = _local(snapshot["manifest-list"])
     data, pos_del, eq_del = {}, set(), {}
     for mrec in ac.iter_records(mlist):
@@ -224,6 +230,8 @@ def snapshot_files(table_path: str, snapshot: dict,
                 raise IcebergError(
                     f"only PARQUET data files supported offline, got {fmt}")
             if content == _CONTENT_DATA:
+                if admit is not None and not admit(df_rec):
+                    continue
                 # field ids the manifest PROVES are physically in the
                 # file (value_counts/bounds come from its footer) —
                 # the identity-partition injection decision reads this
@@ -307,25 +315,16 @@ def read_iceberg(spark: SparkSession, table_path: str,
     deletes still apply). ``prune`` = [(col, op, literal), ...] simple
     top-level conjuncts of the consumer's WHERE clause: data files
     whose manifest Appendix-D bounds prove no match are dropped from
-    the scan at PLANNING time (`prune_data_files` — sound, advisory;
-    the caller still applies its full predicate)."""
+    the scan at PLANNING time, in the same manifest walk that lists
+    the files (`_data_file_test` — sound, advisory; the caller still
+    applies its full predicate)."""
     meta = load_metadata(table_path)
     snap = select_snapshot(meta, snapshot_id, as_of_timestamp)
     schema = spark_schema(meta)
-    data, pos_del, eq_del = snapshot_files(table_path, snap,
-                                           with_partitions=True)
-    for col, op, lit in prune or []:
-        try:
-            cands, skipped = prune_data_files(
-                table_path, col, op, lit,
-                snapshot_id=snap["snapshot-id"],
-                session_tz=spark.conf.get(
-                    "spark.sql.session.timeZone"))
-        except IcebergError:
-            continue  # unknown column/op/literal -> no pruning
-        if skipped:
-            cset = set(cands)
-            data = [t for t in data if t[0] in cset]
+    data, pos_del, eq_del = snapshot_files(
+        table_path, snap, with_partitions=True,
+        admit=_data_file_test(meta, prune, spark.conf.get(
+            "spark.sql.session.timeZone")) if prune else None)
     if file_subset is not None:
         data = [t for t in data if t[0] in file_subset]
     if not data:
@@ -551,152 +550,66 @@ def _bounds_map(d: dict, key: str) -> dict:
     return out
 
 
-def prune_data_files(table_path: str, col: str, op: str, value,
+def _counts(d: dict, key: str) -> Optional[dict]:
+    """{field id: count} from a manifest entry's count field, or None
+    when the entry has none."""
+    kvs = d.get(key)
+    if kvs is None:
+        return None
+    return {int(kv["key"]): int(kv["value"]) for kv in kvs
+            if kv.get("value") is not None}
+
+
+def _data_file_test(meta: dict, prune, session_tz: Optional[str]):
+    """A test of a manifest `data_file` record that is False when its
+    record count, null counts and Appendix-D bounds prove no row
+    matches every usable ``(col, op, literal)`` conjunct
+    (`file_stats.may_match`) — no parquet footer is opened. None when
+    no conjunct is usable."""
+    conds = usable_conjuncts(prune, spark_schema(meta), session_tz)
+    if not conds:
+        return None
+    by_name = {f["name"]: (f["id"], f.get("type"))
+               for f in current_schema(meta)["fields"]}
+
+    def test(d: dict) -> bool:
+        nulls = _counts(d, "null_value_counts") or {}
+        lows, highs = (_bounds_map(d, k)
+                       for k in ("lower_bounds", "upper_bounds"))
+
+        def col(name: str) -> tuple:
+            fid, itype = by_name[name]
+            return (d.get("record_count"), nulls.get(fid),
+                    decode_single_value(lows.get(fid), itype),
+                    decode_single_value(highs.get(fid), itype))
+        return all(may_match(op, v, *col(c)) for c, op, v in conds)
+    return test
+
+
+def prune_data_files(table_path: str, prune: list[tuple],
                      snapshot_id: Optional[int] = None,
                      session_tz: Optional[str] = None
                      ) -> tuple[list[str], list[str]]:
     """Manifest-bounds file pruning: (candidates, skipped) LOCAL data
-    file paths for a simple `col <op> literal` predicate, using each
-    entry's Appendix-D lower/upper bounds — no parquet footer is
-    opened. Sound by construction: a file is skipped ONLY when its
-    bounds prove no row can match; missing/undecodable bounds keep the
-    file. This is the planning-time half of predicate pushdown at
-    100 TB — the scan half (row-group skipping) still happens inside
-    parquet for the kept files."""
-    if op not in ("=", "<", "<=", ">", ">=", "isnull", "notnull",
-                  "in"):
-        raise IcebergError(f"unsupported prune operator: {op}")
+    file paths of a snapshot for the ``(col, op, literal)`` conjuncts,
+    read in one walk of its manifests. Sound by construction: a file
+    is skipped ONLY when its manifest entry proves no row can match;
+    a conjunct that cannot prune is ignored. This is the planning-time
+    half of predicate pushdown at 100 TB — the scan half (row-group
+    skipping) still happens inside parquet for the kept files."""
     meta = load_metadata(table_path)
-    snap = select_snapshot(meta, snapshot_id)
-    fields = current_schema(meta)["fields"]
-    fld = next((f for f in fields if f["name"] == col), None)
-    if fld is None:
-        raise IcebergError(f"unknown column for pruning: {col}")
-    fid, itype = fld["id"], fld.get("type")
-    # coerce the literal through the column's Iceberg type so the
-    # comparison is type-correct (e.g. '2024-01-02' vs date bounds).
-    # A fractional literal against an int column must NOT truncate —
-    # `col < 3.5` with int()-truncation to 3 would unsoundly skip a
-    # file whose bounds are exactly [3, 3]; Python compares int bounds
-    # with float literals correctly, so keep the fraction. An
-    # uncoercible literal raises IcebergError so callers (the DELETE
-    # path, read_iceberg) fall back to the unpruned scan instead of
-    # crashing. TYPED literals (datetime.date / datetime) prune ONLY
-    # matching column types, and `timestamptz` literals convert
-    # through the SESSION timezone before comparing against the
-    # bounds' UTC micros — Spark interprets a zone-less literal in
-    # the session zone, so the naive-vs-UTC comparison was the r15
-    # judge's confirmed wrong-answer edge #2 (`timestamp` (ntz) stays
-    # naive-vs-naive, which is sound as it was).
-    def _coerce_one(value):
-        if not isinstance(itype, str):
-            return value
-        import datetime as dt
-        from lightning_metastore_spark.sources.delta_reader import (
-            _CANON_DATE_RE,
-            _ts_utc_naive,
-        )
-        typed = isinstance(value, dt.date)   # date OR datetime
-        if itype in ("int", "long") and not isinstance(value, bool):
-            if typed or isinstance(value, str):
-                raise ValueError("type mismatch")
-            if not isinstance(value, int):
-                # keep a fractional literal fractional — int()
-                # truncation would unsoundly skip boundary files —
-                # but never round-trip an exact int through float
-                # (ints above 2^53 would corrupt)
-                v = float(value)
-                value = int(v) if v.is_integer() else v
-        elif itype in ("float", "double"):
-            if typed or isinstance(value, str):
-                raise ValueError("type mismatch")
-            value = float(value)
-        elif itype == "date":
-            if isinstance(value, dt.datetime):
-                raise ValueError("timestamp literal vs date column")
-            if isinstance(value, str):
-                if not _CANON_DATE_RE.fullmatch(value.strip()):
-                    raise ValueError("non-canonical date literal")
-                value = dt.date.fromisoformat(value.strip())
-        elif itype in ("timestamp", "timestamptz"):
-            if isinstance(value, dt.date) \
-                    and not isinstance(value, dt.datetime):
-                raise ValueError("date literal vs timestamp column")
-            value = _ts_utc_naive(value, session_tz,
-                                  ntz=(itype == "timestamp"))
-            if value is None:
-                raise ValueError(
-                    "literal/zone not resolvable for timestamp "
-                    "pruning")
-        elif itype == "string":
-            if typed:
-                # `scol = DATE '...'` casts the STRING COLUMN, so
-                # raw string bounds are not comparable
-                raise ValueError("typed literal vs string column")
-        return value
+    test = _data_file_test(meta, prune, session_tz)
+    skipped = set()
 
-    try:
-        if op == "in":
-            members = (value if isinstance(value, (list, tuple))
-                       else [value])
-            if not members:
-                raise ValueError("empty IN list")
-            value = tuple(_coerce_one(m) for m in members)
-        elif op not in ("isnull", "notnull"):
-            value = _coerce_one(value)
-    except (ValueError, TypeError) as e:
-        raise IcebergError(
-            f"cannot coerce literal {value!r} to {itype} for "
-            f"pruning") from e
-    keep: list[str] = []
-    skipped: list[str] = []
-    for mrec in ac.iter_records(_local(snap["manifest-list"])):
-        for entry in ac.iter_records(_local(mrec["manifest_path"])):
-            if entry.get("status") == _STATUS_DELETED:
-                continue
-            d = entry["data_file"]
-            if int(d.get("content", _CONTENT_DATA)
-                   or _CONTENT_DATA) != _CONTENT_DATA:
-                continue  # delete files are never pruned
-            p = _local(d["file_path"])
-            rc = d.get("record_count")
-            if rc is not None and int(rc) == 0:
-                skipped.append(p)        # empty file: nothing matches
-                continue
-            if op in ("isnull", "notnull"):
-                nvc = None
-                for kv in d.get("null_value_counts") or []:
-                    if int(kv.get("key", -1)) == fid \
-                            and kv.get("value") is not None:
-                        nvc = int(kv["value"])
-                if nvc is None:
-                    keep.append(p)       # unknowable -> conservative
-                elif op == "isnull":
-                    (skipped if nvc == 0 else keep).append(p)
-                else:
-                    (skipped if rc is not None and nvc == int(rc)
-                     else keep).append(p)
-                continue
-            lo = decode_single_value(
-                _bounds_map(d, "lower_bounds").get(fid), itype)
-            hi = decode_single_value(
-                _bounds_map(d, "upper_bounds").get(fid), itype)
-            if lo is None or hi is None:
-                keep.append(p)           # unknowable -> conservative
-                continue
-            try:
-                if op == "in":
-                    ok = any(lo <= m <= hi for m in value)
-                else:
-                    ok = {"=": lambda: lo <= value <= hi,
-                          "<": lambda: lo < value,
-                          "<=": lambda: lo <= value,
-                          ">": lambda: hi > value,
-                          ">=": lambda: hi >= value}[op]()
-            except TypeError:
-                ok = True                # incomparable -> conservative
-            (keep if ok else skipped).append(p)
-    return sorted(set(keep)), sorted(set(skipped) - set(keep))
+    def admit(d: dict) -> bool:
+        if test is None or test(d):
+            return True
+        skipped.add(_local(d["file_path"]))
+        return False
+    data = snapshot_files(table_path, select_snapshot(meta, snapshot_id),
+                          admit=admit)[0]
+    cands = [p for p, _s in data]
+    return cands, sorted(skipped - set(cands))
 
 
 def iceberg_files(spark: SparkSession, table_path: str,
@@ -710,13 +623,6 @@ def iceberg_files(spark: SparkSession, table_path: str,
     snap = select_snapshot(meta, snapshot_id)
     by_id = {f["id"]: (f["name"], f.get("type"))
              for f in current_schema(meta)["fields"]}
-
-    def _counts(d: dict, key: str) -> Optional[dict]:
-        kvs = d.get(key)
-        if kvs is None:
-            return None
-        return {int(kv["key"]): int(kv["value"]) for kv in kvs
-                if kv.get("value") is not None}
 
     def _readable(d: dict, key: str) -> Optional[dict]:
         raw = _bounds_map(d, key)

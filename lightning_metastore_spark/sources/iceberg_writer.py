@@ -56,6 +56,7 @@ from lightning_metastore_spark.plan_json import (
 )
 from lightning_metastore_spark.sources import avro_codec as ac
 from lightning_metastore_spark.sources import iceberg_reader as ir
+from lightning_metastore_spark.sources.file_stats import footer_stats
 
 # the manifest-file / manifest-list Avro schemas this writer emits —
 # the subset of the spec's fields the planner path needs, under the
@@ -147,22 +148,6 @@ def _parse_partition_value(raw, type_name: str):
     return raw
 
 
-def _single_value_bytes(v, type_name: str) -> bytes:
-    """The spec's Appendix-D single-value binary serialization, for
-    manifest-list field summaries (lower/upper bounds)."""
-    import struct
-    if type_name == "integer":
-        return struct.pack("<i", v)
-    if type_name == "long":
-        return struct.pack("<q", v)
-    if type_name == "boolean":
-        return b"\x01" if v else b"\x00"
-    if type_name == "date":
-        import datetime as dt
-        return struct.pack("<i", (v - dt.date(1970, 1, 1)).days)
-    return str(v).encode("utf-8")
-
-
 def _ice_single_value_bytes(v, itype) -> bytes:
     """Appendix-D single-value binary serialization for manifest
     lower/upper bounds, keyed by the ICEBERG type string."""
@@ -207,70 +192,59 @@ def _ice_single_value_bytes(v, itype) -> bytes:
     raise ir.IcebergError(f"no bound serialization for {itype}")
 
 
-def _parquet_column_stats(p: str, field_ids: dict, field_types: dict
-                          ) -> dict:
-    """Per-column manifest metrics from the parquet footer —
+def _bound_kvs(cols: list, side: str, field_types: dict
+               ) -> Optional[list]:
+    """Manifest bound entries (Appendix-D bytes) for the ``side`` ("lo"
+    or "hi") of each (field id, `file_stats.ColumnStats`) in ``cols``
+    that has one and whose type serializes."""
+    out = []
+    for fid, c in cols:
+        if getattr(c, side) is None:
+            continue
+        try:
+            out.append({"key": fid, "value": _ice_single_value_bytes(
+                getattr(c, side), field_types.get(fid))})
+        except Exception:  # noqa: BLE001 — skip unserializable
+            continue
+    return out or None
+
+
+def _added_entries(meta: dict, files: list[tuple], partition_by: list[str],
+                   snap_id: int, seq: int, content: int = 0,
+                   equality_ids: Optional[list] = None) -> list[dict]:
+    """ADDED manifest entries for staged ``files`` = [(path, partition
+    values)]: record counts and, for data files, per-column metrics —
     value_counts / null_value_counts / lower_bounds / upper_bounds
-    (spec "Manifests"). Footer reads are metadata-only; a real runtime
-    consuming our table prunes files on these without opening any
-    parquet. Columns whose stats are absent (or whose type lacks a
-    bound serialization) simply omit their entry — readers treat a
-    missing bound as unknowable, which is always sound."""
-    try:
-        import pyarrow.parquet as pq
-        md = pq.ParquetFile(p).metadata
-    except Exception:  # noqa: BLE001 — metrics are advisory
-        return {"value_counts": None, "null_value_counts": None,
-                "lower_bounds": None, "upper_bounds": None}
-    vals: dict = {}
-    nulls: dict = {}
-    mins: dict = {}
-    maxs: dict = {}
-    no_bounds: set = set()
-    no_nulls: set = set()   # any row group missing null stats -> omit
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        for j in range(rgm.num_columns):
-            col = rgm.column(j)
-            fid = field_ids.get(col.path_in_schema)
-            if fid is None:
-                continue  # nested leaf / unknown column
-            vals[fid] = vals.get(fid, 0) + int(col.num_values)
-            st = col.statistics
-            if st is not None and st.null_count is not None:
-                nulls[fid] = nulls.get(fid, 0) + int(st.null_count)
-            else:
-                # a partial null count UNDERCOUNTS — a planner would
-                # unsoundly prune IS NULL on it; omit the column
-                no_nulls.add(fid)
-            if st is not None and st.has_min_max:
-                mn, mx = st.min, st.max
-                mins[fid] = mn if fid not in mins else min(mins[fid], mn)
-                maxs[fid] = mx if fid not in maxs else max(maxs[fid], mx)
-            else:
-                no_bounds.add(fid)
-
-    def _ser(d: dict):
-        out = []
-        for fid in sorted(d):
-            if fid in no_bounds:
-                continue
-            try:
-                out.append({"key": fid, "value": _ice_single_value_bytes(
-                    d[fid], field_types.get(fid))})
-            except Exception:  # noqa: BLE001 — skip unserializable
-                continue
-        return out or None
-
-    return {
-        "value_counts": ([{"key": k, "value": v}
-                          for k, v in sorted(vals.items())] or None),
-        "null_value_counts": ([{"key": k, "value": v}
-                               for k, v in sorted(nulls.items())
-                               if k not in no_nulls] or None),
-        "lower_bounds": _ser(mins),
-        "upper_bounds": _ser(maxs),
-    }
+    (spec "Manifests") — from ONE footer read per file
+    (`file_stats.footer_stats`). A real runtime consuming our table
+    prunes files on these without opening any parquet. Columns whose
+    stats are absent (or whose type lacks a bound serialization) omit
+    their entry — readers treat a missing bound as unknowable, which
+    is always sound."""
+    field_ids, field_types = _current_schema_fields(meta)
+    entries = []
+    for p, pv in files:
+        rows, stats = footer_stats(p) or (0, {})
+        cols = sorted((field_ids[n], c) for n, c in stats.items()
+                      if n in field_ids)
+        data_file = {"content": content, "file_path": p,
+                     "file_format": "PARQUET", "record_count": rows,
+                     "file_size_in_bytes": os.path.getsize(p),
+                     "equality_ids": equality_ids}
+        if content == 0:
+            data_file.update({
+                "value_counts": ([{"key": k, "value": c.values}
+                                  for k, c in cols] or None),
+                "null_value_counts": ([{"key": k, "value": c.nulls}
+                                       for k, c in cols
+                                       if c.nulls is not None] or None),
+                "lower_bounds": _bound_kvs(cols, "lo", field_types),
+                "upper_bounds": _bound_kvs(cols, "hi", field_types)})
+        if partition_by:
+            data_file["partition"] = {c: pv.get(c) for c in partition_by}
+        entries.append({"status": 1, "snapshot_id": snap_id,
+                        "sequence_number": seq, "data_file": data_file})
+    return entries
 
 
 def _current_schema_fields(meta: dict) -> tuple[dict, dict]:
@@ -306,13 +280,15 @@ def _field_summaries(entries: list[dict], partition_by: list[str],
     (contains_null + single-value-serialized lower/upper bounds)."""
     out = []
     for c in partition_by:
-        tn = spark_types[c].typeName()
+        itype = _ICE_PRIM[spark_types[c].typeName()]
         vals = [e["data_file"]["partition"].get(c) for e in entries]
         nn = [v for v in vals if v is not None]
         out.append({
             "contains_null": any(v is None for v in vals),
-            "lower_bound": _single_value_bytes(min(nn), tn) if nn else None,
-            "upper_bound": _single_value_bytes(max(nn), tn) if nn else None,
+            "lower_bound": (_ice_single_value_bytes(min(nn), itype)
+                            if nn else None),
+            "upper_bound": (_ice_single_value_bytes(max(nn), itype)
+                            if nn else None),
         })
     return out
 
@@ -493,17 +469,6 @@ def _stage_data_files(df: DataFrame, table_path: str, ddir: str,
     return data_files
 
 
-def _parquet_num_rows(p: str) -> int:
-    """Real record counts from the parquet footer (a real runtime
-    reading our table uses them for planning); pyarrow footer reads
-    are metadata-only."""
-    try:
-        import pyarrow.parquet as pq
-        return int(pq.ParquetFile(p).metadata.num_rows)
-    except Exception:  # noqa: BLE001 — counts are advisory
-        return 0
-
-
 def write_iceberg(df: DataFrame, table_path: str,
                   mode: str = "append",
                   partition_by: Optional[list[str]] = None,
@@ -662,19 +627,7 @@ def write_iceberg(df: DataFrame, table_path: str,
                                    spark_types, seq, now_ms)
 
     manifest = os.path.join(mdir, f"m-{snap_id}.avro")
-    field_ids, field_types = _current_schema_fields(meta)
-    entries = []
-    for p, pv in data_files:
-        data_file = {"content": 0, "file_path": p,
-                     "file_format": "PARQUET",
-                     "record_count": _parquet_num_rows(p),
-                     "file_size_in_bytes": os.path.getsize(p),
-                     "equality_ids": None}
-        data_file.update(_parquet_column_stats(p, field_ids, field_types))
-        if partition_by:
-            data_file["partition"] = {c: pv.get(c) for c in partition_by}
-        entries.append({"status": 1, "snapshot_id": snap_id,
-                        "sequence_number": seq, "data_file": data_file})
+    entries = _added_entries(meta, data_files, partition_by, snap_id, seq)
     ac.write_container(manifest,
                        _manifest_schema_for(partition_by, spark_types),
                        entries)
@@ -879,27 +832,14 @@ def delta_to_iceberg(spark: SparkSession, delta_path: str) -> int:
         os.makedirs(mdir, exist_ok=True)
         seq, snap_id, parent, version = 1, 1, None, 1
 
-    field_ids, field_types = _current_schema_fields(meta)
     partition_by = list(snap.partition_columns)
-    entries = []
-    for rel, pv in snap.files:
-        p = os.path.join(delta_path, dr._resolve_rel(delta_path, rel))
-        data_file = {"content": 0, "file_path": p,
-                     "file_format": "PARQUET",
-                     "record_count": _parquet_num_rows(p),
-                     "file_size_in_bytes": os.path.getsize(p),
-                     "equality_ids": None}
-        data_file.update(_parquet_column_stats(p, field_ids,
-                                               field_types))
-        if partition_by:
-            # Delta logs partitionValues as STRINGS; type through the
-            # column's Spark type like the path-segment parser
-            data_file["partition"] = {
-                c: _parse_partition_value(
-                    pv.get(c), spark_types[c].typeName())
-                for c in partition_by}
-        entries.append({"status": 1, "snapshot_id": snap_id,
-                        "sequence_number": seq, "data_file": data_file})
+    # Delta logs partitionValues as STRINGS; type through the column's
+    # Spark type like the path-segment parser
+    entries = _added_entries(meta, [
+        (os.path.join(delta_path, dr._resolve_rel(delta_path, rel)),
+         {c: _parse_partition_value(pv.get(c), spark_types[c].typeName())
+          for c in partition_by})
+        for rel, pv in snap.files], partition_by, snap_id, seq)
     manifest = os.path.join(mdir, f"m-{snap_id}.avro")
     ac.write_container(manifest,
                        _manifest_schema_for(partition_by, spark_types),
@@ -1239,23 +1179,14 @@ def _dml_prune_subset(spark, table_path: str,
     """Manifest-bounds prune set for a DML predicate, from the hints
     `simple_where_conjuncts` reads off Spark's parse of it: top-level
     ANDs, BETWEEN, IN, IS [NOT] NULL, either operand order, typed
-    literals. Each conjunct prunes independently (intersection of
-    candidates); any conjunct the bounds reader rejects is skipped —
-    always sound."""
-    prune_subset = None
-    for col, op, lit in simple_where_conjuncts(spark, predicate):
-        try:
-            cands, skipped = ir.prune_data_files(
-                table_path, col, op, lit,
-                session_tz=spark.conf.get(
-                    "spark.sql.session.timeZone"))
-        except ir.IcebergError:
-            continue  # unknown column / operator -> no pruning
-        if skipped:
-            cset = set(cands)
-            prune_subset = (cset if prune_subset is None
-                            else prune_subset & cset)
-    return prune_subset
+    literals. None when no file can be skipped."""
+    conjs = simple_where_conjuncts(spark, predicate)
+    if not conjs:
+        return None
+    cands, skipped = ir.prune_data_files(
+        table_path, conjs,
+        session_tz=spark.conf.get("spark.sql.session.timeZone"))
+    return set(cands) if skipped else None
 
 
 def delete_where_iceberg(spark: SparkSession, table_path: str,
@@ -1470,19 +1401,8 @@ def _mor_delete_commit(spark: SparkSession, table_path: str,
 
     spec_id = meta.get("default-spec-id", 0)
     mschema = _manifest_schema_for(partition_by, spark_types)
-    entries = []
-    for p, pv in delete_files:
-        data_file = {"content": 1, "file_path": p,
-                     "file_format": "PARQUET",
-                     "record_count": _parquet_num_rows(p),
-                     "file_size_in_bytes": os.path.getsize(p),
-                     "equality_ids": None}
-        if partition_by:
-            data_file["partition"] = {c: pv.get(c)
-                                      for c in partition_by}
-        entries.append({"status": 1, "snapshot_id": snap_id,
-                        "sequence_number": seq,
-                        "data_file": data_file})
+    entries = _added_entries(meta, delete_files, partition_by, snap_id,
+                             seq, content=1)
     manifest = os.path.join(mdir, f"m-{snap_id}-del.avro")
     ac.write_container(manifest, mschema, entries)
     recs = []
@@ -1506,22 +1426,8 @@ def _mor_delete_commit(spark: SparkSession, table_path: str,
                                        partition_by, spark_types, seq,
                                        now_ms)
         if data_files:
-            field_ids, field_types = _current_schema_fields(meta)
-            aentries = []
-            for p, pv in data_files:
-                data_file = {"content": 0, "file_path": p,
-                             "file_format": "PARQUET",
-                             "record_count": _parquet_num_rows(p),
-                             "file_size_in_bytes": os.path.getsize(p),
-                             "equality_ids": None}
-                data_file.update(_parquet_column_stats(
-                    p, field_ids, field_types))
-                if partition_by:
-                    data_file["partition"] = {c: pv.get(c)
-                                              for c in partition_by}
-                aentries.append({"status": 1, "snapshot_id": snap_id,
-                                 "sequence_number": seq,
-                                 "data_file": data_file})
+            aentries = _added_entries(meta, data_files, partition_by,
+                                      snap_id, seq)
             amanifest = os.path.join(mdir, f"m-{snap_id}-upd.avro")
             ac.write_container(amanifest, mschema, aentries)
             recs.append({"manifest_path": amanifest,
@@ -1620,22 +1526,8 @@ def _commit_touched_rewrite(spark: SparkSession, table_path: str,
     recs = carried
     if data_files:
         manifest = os.path.join(mdir, f"m-{snap_id}.avro")
-        field_ids, field_types = _current_schema_fields(meta)
-        entries = []
-        for p, pv in data_files:
-            data_file = {"content": 0, "file_path": p,
-                         "file_format": "PARQUET",
-                         "record_count": _parquet_num_rows(p),
-                         "file_size_in_bytes": os.path.getsize(p),
-                         "equality_ids": None}
-            data_file.update(_parquet_column_stats(p, field_ids,
-                                                   field_types))
-            if partition_by:
-                data_file["partition"] = {c: pv.get(c)
-                                          for c in partition_by}
-            entries.append({"status": 1, "snapshot_id": snap_id,
-                            "sequence_number": seq,
-                            "data_file": data_file})
+        entries = _added_entries(meta, data_files, partition_by,
+                                 snap_id, seq)
         ac.write_container(manifest, mschema, entries)
         summaries = (_field_summaries(entries, partition_by, spark_types)
                      if partition_by else None)
@@ -1854,18 +1746,12 @@ def purge_iceberg(spark: SparkSession, table_path: str) -> dict:
                             F.max(f"`{kcol}`").alias("mx"))
                        .collect()[0])
                 if row["mn"] is not None:
-                    try:
-                        keep1, _sk1 = ir.prune_data_files(
-                            table_path, kcol, ">=", row["mn"],
-                            session_tz=spark.conf.get(
-                                "spark.sql.session.timeZone"))
-                        keep2, _sk2 = ir.prune_data_files(
-                            table_path, kcol, "<=", row["mx"],
-                            session_tz=spark.conf.get(
-                                "spark.sql.session.timeZone"))
-                        cands &= set(keep1) & set(keep2)
-                    except ir.IcebergError:
-                        pass  # unprunable type -> keep candidates
+                    keep, _sk = ir.prune_data_files(
+                        table_path, [(kcol, ">=", row["mn"]),
+                                     (kcol, "<=", row["mx"])],
+                        session_tz=spark.conf.get(
+                            "spark.sql.session.timeZone"))
+                    cands &= set(keep)
         touched |= cands
     if not touched:
         # deletes reference nothing live: drop the manifests only
@@ -1879,7 +1765,7 @@ def purge_iceberg(spark: SparkSession, table_path: str) -> dict:
     tset = touched
     for p, _s, _pv, _f in data:
         if p in tset:
-            before += _parquet_num_rows(p)
+            before += (footer_stats(p) or (0, None))[0]
     n_kept = survivors.count() if touched else 0
     _commit_touched_rewrite(spark, table_path, meta, snap, touched,
                             survivors, "replace", partition_by,
@@ -2290,19 +2176,8 @@ def upsert_iceberg(spark: SparkSession, table_path: str,
 
     spec_id = meta.get("default-spec-id", 0)
     mschema = _manifest_schema_for(partition_by, spark_types)
-    dentries = []
-    for p, pv in delete_files:
-        data_file = {"content": 2, "file_path": p,
-                     "file_format": "PARQUET",
-                     "record_count": _parquet_num_rows(p),
-                     "file_size_in_bytes": os.path.getsize(p),
-                     "equality_ids": list(eq_ids)}
-        if partition_by:
-            data_file["partition"] = {c: pv.get(c)
-                                      for c in partition_by}
-        dentries.append({"status": 1, "snapshot_id": snap_id,
-                         "sequence_number": seq,
-                         "data_file": data_file})
+    dentries = _added_entries(meta, delete_files, partition_by, snap_id,
+                              seq, content=2, equality_ids=list(eq_ids))
     dmanifest = os.path.join(mdir, f"m-{snap_id}-eqdel.avro")
     ac.write_container(dmanifest, mschema, dentries)
 
@@ -2310,22 +2185,8 @@ def upsert_iceberg(spark: SparkSession, table_path: str,
     data_files = _stage_data_files(rows, table_path, ddir,
                                    partition_by, spark_types, seq,
                                    now_ms)
-    field_ids, field_types = _current_schema_fields(meta)
-    aentries = []
-    for p, pv in data_files:
-        data_file = {"content": 0, "file_path": p,
-                     "file_format": "PARQUET",
-                     "record_count": _parquet_num_rows(p),
-                     "file_size_in_bytes": os.path.getsize(p),
-                     "equality_ids": None}
-        data_file.update(_parquet_column_stats(p, field_ids,
-                                               field_types))
-        if partition_by:
-            data_file["partition"] = {c: pv.get(c)
-                                      for c in partition_by}
-        aentries.append({"status": 1, "snapshot_id": snap_id,
-                         "sequence_number": seq,
-                         "data_file": data_file})
+    aentries = _added_entries(meta, data_files, partition_by, snap_id,
+                              seq)
     amanifest = os.path.join(mdir, f"m-{snap_id}-ups.avro")
     ac.write_container(amanifest, mschema, aentries)
 

@@ -468,10 +468,12 @@ def test_chain_in_literal_skips_column_walk(ctx, spark, monkeypatch):
                    "SELECT n FROM c").collect()
     assert sorted(r.n for r in rows) == want
     assert calls == [1, 1]
-    # toJSON writes a named WINDOW's specs as null, so the walk runs
+    # toJSON writes a named WINDOW's specs as null, so the walk runs,
+    # and it requalifies a chain-qualified column inside them
     rows = ctx.sql(f"SELECT r_name, count(*) OVER w AS c FROM {t} "
-                   "WINDOW w AS (PARTITION BY r_regionkey)").collect()
+                   f"WINDOW w AS (PARTITION BY {t}.r_regionkey)").collect()
     assert sorted(r.r_name for r in rows) == want
+    assert all(r.c == 1 for r in rows)
     assert calls == [1, 1, 1]
 
 

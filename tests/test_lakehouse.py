@@ -1139,30 +1139,30 @@ def test_iceberg_column_bounds_and_pruning(spark, tmp_path):
 
     # ---- pruning: id ranges are disjoint across the 4 files, so an
     # equality predicate keeps exactly one file
-    cands, skipped = ir.prune_data_files(path, "id", "=", 5)
+    cands, skipped = ir.prune_data_files(path, [("id", "=", 5)])
     assert len(cands) == 1 and len(skipped) == 3
     got = (spark.read.parquet(*cands)
            .where("id = 5").collect())
     assert len(got) == 1
     # range predicate: no file lies entirely above id<1000
-    cands2, skipped2 = ir.prune_data_files(path, "id", "<", 1000)
+    cands2, skipped2 = ir.prune_data_files(path, [("id", "<", 1000)])
     assert len(cands2) == 4 and not skipped2
     # all-null column v in no file -> bounds exist; prune on v works
-    c3, s3 = ir.prune_data_files(path, "v", ">=", 2 * 99)
+    c3, s3 = ir.prune_data_files(path, [("v", ">=", 2 * 99)])
     assert len(c3) == 1
-    with pytest.raises(ir.IcebergError, match="unknown column"):
-        ir.prune_data_files(path, "nope", "=", 1)
+    # an unknown column is ignored: nothing is skipped
+    cn, sn = ir.prune_data_files(path, [("nope", "=", 1)])
+    assert len(cn) == 4 and not sn
     # fractional literal against a long column must NOT truncate:
     # id < 24.5 must keep the file whose bounds include id=24
-    cf, _sf = ir.prune_data_files(path, "id", "<", 24.5)
+    cf, _sf = ir.prune_data_files(path, [("id", "<", 24.5)])
     assert any(spark.read.parquet(f).where("id = 24").count() == 1
                for f in cf)
-    # an uncoercible literal raises IcebergError (the DELETE path
-    # catches it and falls back to the unpruned scan; what Spark then
-    # does with the predicate — ANSI cast error or rows — is Spark's
-    # contract, not pruning's)
-    with pytest.raises(ir.IcebergError, match="coerce"):
-        ir.prune_data_files(path, "id", "=", "abc")
+    # an uncoercible literal is ignored: nothing is skipped (what
+    # Spark then does with the predicate — ANSI cast error or rows —
+    # is Spark's contract, not pruning's)
+    ca, sa = ir.prune_data_files(path, [("id", "=", "abc")])
+    assert len(ca) == 4 and not sa
 
     # ---- DELETE with a simple predicate prunes its touched-file scan
     # and the survivor rewrite keeps bounds (carried or recomputed)
@@ -1172,7 +1172,7 @@ def test_iceberg_column_bounds_and_pruning(spark, tmp_path):
     assert len(files2) == 4            # 3 untouched + 1 rewritten
     assert all(r.readable_lower_bounds is not None for r in files2)
     # pruning still sound on the post-delete snapshot
-    c4, s4 = ir.prune_data_files(path, "id", "=", 6)
+    c4, s4 = ir.prune_data_files(path, [("id", "=", 6)])
     assert len(c4) == 1
     assert (spark.read.parquet(*c4).where("id = 6").count()) == 1
     # fractional DELETE literal goes through the non-truncating
@@ -1236,7 +1236,7 @@ def test_iceberg_nested_schema_write_roundtrip(spark, tmp_path):
     assert ir.read_iceberg(spark, path, snapshot_id=1).count() == 2
 
     # top-level primitive metrics still present; id prunes
-    c, s = ir.prune_data_files(path, "id", "=", 3)
+    c, s = ir.prune_data_files(path, [("id", "=", 3)])
     assert s and len(c) >= 1
     assert (spark.read.parquet(*c).where("id = 3").count()) == 1
 
@@ -1616,7 +1616,7 @@ def test_review_fixes_round14_second_pass(spark, tmp_path):
     p2 = str(tmp_path / "big")
     write_iceberg(spark.createDataFrame([(big,), (1,)], "id long")
                   .repartitionByRange(2, "id"), p2, mode="error")
-    cands, _sk = ir.prune_data_files(p2, "id", "=", big)
+    cands, _sk = ir.prune_data_files(p2, [("id", "=", big)])
     assert any(spark.read.parquet(c).where(f"id = {big}").count() == 1
                for c in cands)
 
@@ -3600,7 +3600,9 @@ def _prune_tables(spark, tmp_path):
     holding the same 40 rows (ids 0..39, one block of 10 per file),
     plus {format: (chain, path, unpruned reader)}. File 1 holds every
     NULL of `nv`; `ts` steps 15 min from 2024-11-03 04:00 UTC, across
-    America/New_York's DST fall-back; `sd` spells dates loosely."""
+    America/New_York's DST fall-back; `sd` spells dates loosely; `p`
+    and `q` are DECIMAL(10,2) and DECIMAL(20,2) `id + 1.15`, so 10.15
+    is the max of file 0."""
     from lightning_metastore_spark.sources.iceberg_writer import (
         write_iceberg,
     )
@@ -3613,7 +3615,9 @@ def _prune_tables(spark, tmp_path):
             "concat('2024-1-', id % 28 + 1) AS sd",
             "timestamp_seconds(1730606400 + id * 900) AS ts",
             "CAST(timestamp_seconds(1730606400 + id * 900) "
-            "AS TIMESTAMP_NTZ) AS n").coalesce(1)
+            "AS TIMESTAMP_NTZ) AS n",
+            "CAST(id + 1.15 AS DECIMAL(10,2)) AS p",
+            "CAST(id + 1.15 AS DECIMAL(20,2)) AS q").coalesce(1)
 
     dbase, wh = tmp_path / "pd", tmp_path / "pw"
     dbase.mkdir()
@@ -3758,6 +3762,15 @@ _DIFF_SHAPES = [
     "SELECT v, count(*) AS c FROM {a} GROUP BY v HAVING v = 8",
     # a backticked part holding ", " reads as two name parts
     "SELECT t.id FROM {a} t CROSS JOIN side WHERE `t, id` = 1",
+    # decimal literals against decimal columns, and a double one that
+    # Spark compares as a double
+    "SELECT id FROM {a} WHERE q = 10.15",
+    "SELECT id FROM {a} WHERE p = 10.15",
+    "SELECT id FROM {a} WHERE q >= 10.15 AND p >= 10.15",
+    "SELECT id FROM {a} WHERE q BETWEEN 10.15 AND 12.15",
+    "SELECT id FROM {a} WHERE q IN (10.15, 31.15)",
+    "SELECT id FROM {a} WHERE q = 1.015E1",
+    "SELECT id FROM {a} WHERE p = 1.015E1",
 ]
 
 
@@ -3788,6 +3801,50 @@ def test_prune_hints_differential(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", old_tz)
         for name in ("unpruned_delta", "unpruned_iceberg", "side"):
             spark.catalog.dropTempView(name)
+
+
+def test_decimal_columns_write_stats_and_prune(spark, tmp_path):
+    """Delta and Iceberg writes of DECIMAL(9,2), DECIMAL(18,2) and
+    DECIMAL(20,2) columns succeed (pyarrow cannot read the footer
+    stats of the first two, which then carry no bounds), and an
+    Iceberg DECIMAL(20,2) column prunes exactly on a decimal literal
+    but not on a double one."""
+    from lightning_metastore_spark.sources import iceberg_reader as ir
+    from lightning_metastore_spark.sources.iceberg_writer import (
+        write_iceberg,
+    )
+
+    wh = tmp_path / "decwh"
+    wh.mkdir()
+    dp, ip = str(tmp_path / "dec_d"), str(wh / "acc")
+    for lo in (0, 10):
+        block = spark.range(lo, lo + 10).selectExpr(
+            "id", *[f"CAST(id + 1.15 AS DECIMAL({p},2)) AS d{p}"
+                    for p in (9, 18, 20)]).coalesce(1)
+        write_delta(block, dp, mode="append" if lo else "error")
+        write_iceberg(block, ip, mode="append" if lo else "error")
+    for read, path in ((read_delta, dp), (read_iceberg, ip)):
+        got = read(spark, path).where("d9 = 10.15 AND d18 = 10.15 "
+                                      "AND d20 = 10.15").collect()
+        assert [r.id for r in got] == [9]
+
+    # 10.15 is the max of the first file: the decimal literal keeps it
+    # and skips the other; the double 10.15 is not 10.15 exactly, so it
+    # prunes nothing
+    cands, skipped = ir.prune_data_files(ip, [("d20", "=", Decimal("10.15"))])
+    assert len(cands) == 1 and len(skipped) == 1
+    cands, skipped = ir.prune_data_files(ip, [("d20", "=", 10.15)])
+    assert len(cands) == 2 and not skipped
+
+    ctx = LightningContext(spark, warehouse=str(tmp_path / "model"))
+    ctx.sql("CREATE NAMESPACE lightning.datasource.iceberg")
+    ctx.sql(f"REGISTER ICEBERG DATASOURCE w OPTIONS(warehouse '{wh}') "
+            "NAMESPACE lightning.datasource.iceberg")
+    t = "lightning.datasource.iceberg.w.acc"
+    for pred in ("d20 = 10.15", "d20 >= 10.15 AND d20 < 11",
+                 "d20 IN (10.15, 40.15)", "d20 = 1.015E1"):
+        got = ctx.sql(f"SELECT id FROM {t} WHERE {pred}").collect()
+        assert [r.id for r in got] == [9], pred
 
 
 def test_prune_date_literal_vs_string_column(spark, tmp_path):
@@ -3865,9 +3922,10 @@ def test_iceberg_timestamptz_prune_session_tz(spark, tmp_path):
         assert ir.read_iceberg(
             spark, path,
             prune=[("ts", "<=", "2023-12-31 20:00:00")]).count() == 0
-        # no session tz resolvable -> prune_data_files refuses
-        with pytest.raises(ir.IcebergError, match="coerce"):
-            ir.prune_data_files(path, "ts", "<=", lit, session_tz=None)
+        # no session tz resolvable -> the conjunct is ignored
+        cands, skipped = ir.prune_data_files(
+            path, [("ts", "<=", "2023-12-31 20:00:00")], session_tz=None)
+        assert len(cands) == 1 and not skipped
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
 
@@ -3903,6 +3961,15 @@ def test_delta_timestamp_prune_session_tz(spark, tmp_path):
         assert read_delta(
             spark, path,
             prune=[("ts", "=", "2024-06-15 16:00:00")]).count() == 1
+        # stats keep milliseconds: a row 500 us past the logged max is
+        # still inside the file's bounds
+        p2 = str(tmp_path / "dtz_us")
+        write_delta(spark.sql(
+            "SELECT TIMESTAMP'2024-06-15 16:00:00.0005' AS ts, 1L AS id"
+        ).coalesce(1), p2, mode="error")
+        assert read_delta(
+            spark, p2,
+            prune=[("ts", ">=", "2024-06-15 16:00:00.0003")]).count() == 1
         # unknown zone: no pruning rather than wrong pruning
         snap = resolve_snapshot(spark, path)
         assert prune_snapshot_files(
@@ -5968,7 +6035,7 @@ def test_merge_discovery_file_skip(spark, tmp_path, monkeypatch):
     )
     col, op, vals = prunes[0][0]
     assert op == "in" and list(vals) == [35]
-    cands, skipped = prune_data_files(ip, col, op, vals)
+    cands, skipped = prune_data_files(ip, [(col, op, vals)])
     assert len(cands) == 1 and len(skipped) == 3
     got = {r.id: r.v for r in read_iceberg(spark, ip).collect()}
     assert got[35] == 999 and len(got) == 40
@@ -6392,7 +6459,7 @@ def test_iceberg_zorder(spark, tmp_path):
         "CAST(CAST(id / 64 AS INT) AS LONG) AS y")
     write_iceberg(df.repartition(8), path, mode="error")
     # pre-zorder: an x-selective predicate keeps every file
-    pre, pre_skip = irm.prune_data_files(path, "x", "=", 3)
+    pre, pre_skip = irm.prune_data_files(path, [("x", "=", 3)])
     assert len(pre_skip) == 0
 
     # target sized so the rewrite yields ~8 z-range files: with only
@@ -6410,8 +6477,8 @@ def test_iceberg_zorder(spark, tmp_path):
            for r in irm.read_iceberg(spark, path).collect()}
     assert len(got) == 4096          # content invariant
     # post-zorder: both columns' bounds shrink -> files skip
-    cx, sx = irm.prune_data_files(path, "x", "=", 3)
-    cy, sy = irm.prune_data_files(path, "y", "=", 60)
+    cx, sx = irm.prune_data_files(path, [("x", "=", 3)])
+    cy, sy = irm.prune_data_files(path, [("y", "=", 60)])
     assert sx and sy                  # strictly fewer files scanned
     # routed SQL surface
     ctx = LightningContext(spark, warehouse=str(tmp_path / "model"))
@@ -6446,8 +6513,8 @@ def test_iceberg_zorder_partitioned(spark, tmp_path):
     assert res["files_removed"] >= 2
     got = irm.read_iceberg(spark, path).count()
     assert got == 8192
-    _cx, sx = irm.prune_data_files(path, "x", "=", 3)
-    _cy, sy = irm.prune_data_files(path, "y", "=", 60)
+    _cx, sx = irm.prune_data_files(path, [("x", "=", 3)])
+    _cy, sy = irm.prune_data_files(path, [("y", "=", 60)])
     assert sx and sy
     # partition pruning composes with the rewrite
     pr = irm.read_iceberg(spark, path, prune=[("bucket", "=", 1)])

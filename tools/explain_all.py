@@ -8,10 +8,12 @@ review; regenerate after planner-affecting changes:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEADLINE = [
     "q1_pricing_summary",
