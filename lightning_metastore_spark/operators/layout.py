@@ -58,12 +58,17 @@ def file_column_ranges(path: str, column: str) -> list[tuple]:
     """Per-file (min, max) of ``column`` from parquet footer statistics
     (`file_stats.footer_stats`) — the exact information a reader prunes
     with. Driver-side metadata read only (no data scan); used to verify
-    clustering quality."""
+    clustering quality. Only top-level columns have ranges, so a dotted
+    (nested) name is an error; a file some of whose row groups carry no
+    exact bound has no range and is left out."""
     import glob
     import os
 
     from lightning_metastore_spark.sources.file_stats import footer_stats
 
+    if "." in column:
+        raise ValueError(
+            f"file_column_ranges: {column!r} is not a top-level column")
     out = []
     for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
         c = (footer_stats(f) or (0, {}))[1].get(column)

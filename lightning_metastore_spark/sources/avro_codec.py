@@ -36,11 +36,14 @@ import json
 import os
 import struct
 import zlib
-from decimal import Decimal
+from decimal import Context, Decimal
 from typing import Any, BinaryIO, Iterator, Optional
 
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
+# decimal scaling context wide enough for any DECIMAL(38, s): the
+# default 28 digits would round
+_DEC38 = Context(prec=38)
 
 _PRIMITIVES = {"null", "boolean", "int", "long", "float", "double",
                "bytes", "string"}
@@ -231,7 +234,7 @@ def _logical_bytes(b: bytes, schema: Any) -> Any:
     if lt == "decimal":
         scale = schema.get("scale", 0)
         unscaled = int.from_bytes(b, "big", signed=True)
-        return Decimal(unscaled).scaleb(-scale)
+        return Decimal(unscaled).scaleb(-scale, _DEC38)
     return b
 
 
@@ -342,7 +345,7 @@ def _unlogical_int(v: Any, schema: Any) -> int:
 def _unlogical_bytes(v: Any, schema: Any) -> bytes:
     if isinstance(v, Decimal):
         scale = schema.get("scale", 0) if isinstance(schema, dict) else 0
-        unscaled = int(v.scaleb(scale))
+        unscaled = int(v.scaleb(scale, _DEC38))
         length = max(1, (unscaled.bit_length() + 8) // 8)
         return unscaled.to_bytes(length, "big", signed=True)
     return bytes(v)

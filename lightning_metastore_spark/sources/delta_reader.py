@@ -940,19 +940,20 @@ def prune_snapshot_files(snap: DeltaSnapshot,
     keep: set = set()
     skipped = False
     for rel, pv in snap.files:
-        st = _add_stats(snap.stats.get(rel))
-        nr = st.get("numRecords")
+        parsed: list = []   # add.stats, parsed on the first stats column
 
         def _col(name: str) -> tuple:
             if name in parts:
                 raw = pv.get(name)
                 if raw is None:
-                    # every row is NULL (one row stands for an unknown
-                    # count)
-                    n = 1 if nr is None else nr
-                    return n, n, None, None
+                    # every row is NULL (one row stands for the count)
+                    return 1, 1, None, None
                 b = _stats_json_bound(raw, types[name])
-                return nr, 0, b, b
+                return None, 0, b, b
+            if not parsed:
+                parsed.append(_add_stats(snap.stats.get(rel)))
+            st = parsed[0]
+            nr = st.get("numRecords")
             nc = (st.get("nullCount") or {}).get(name)
             lo, hi = (_stats_json_bound((st.get(k) or {}).get(name),
                                         types[name])

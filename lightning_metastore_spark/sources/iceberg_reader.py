@@ -534,7 +534,10 @@ def decode_single_value(b: Optional[bytes], itype) -> Any:
         if m:
             import decimal
             unscaled = int.from_bytes(b, "big", signed=True)
-            return decimal.Decimal(unscaled).scaleb(-int(m.group(1)))
+            # scaleb in a 38-digit context: the default 28 digits would
+            # round a DECIMAL(p>28) bound
+            return decimal.Decimal(unscaled).scaleb(
+                -int(m.group(1)), decimal.Context(prec=38))
     except Exception:  # noqa: BLE001 — malformed bound = unknowable
         return None
     return None

@@ -185,7 +185,8 @@ def _ice_single_value_bytes(v, itype) -> bytes:
     if itype.startswith("decimal"):
         import decimal
         scale = int(itype.rstrip(") ").split(",")[1])
-        unscaled = (int(decimal.Decimal(v).scaleb(scale))
+        unscaled = (int(decimal.Decimal(v).scaleb(
+                        scale, decimal.Context(prec=38)))
                     if not isinstance(v, int) else v)
         n = max(1, (unscaled.bit_length() + 8) // 8)
         return unscaled.to_bytes(n, "big", signed=True)
@@ -1735,7 +1736,9 @@ def purge_iceberg(spark: SparkSession, table_path: str) -> dict:
         cands = {p for p, s, _pv, _f in data
                  if uncond or s is None or int(s) < int(max_seq)}
         # single shared key column: prune candidates via manifest
-        # bounds against the deletes' key range
+        # bounds against the deletes' key range. Equality deletes match
+        # null-safely, so a NULL delete key reaches files whose key
+        # range says nothing (all-NULL or partly NULL): no prune then.
         key_sets = {tuple(sorted(ids)) for _p, _s, ids in eq_del}
         if len(key_sets) == 1 and len(next(iter(key_sets))) == 1:
             kid = next(iter(key_sets))[0]
@@ -1743,9 +1746,11 @@ def purge_iceberg(spark: SparkSession, table_path: str) -> dict:
             if kcol is not None:
                 row = (spark.read.parquet(*[p for p, _s, _i in eq_del])
                        .agg(F.min(f"`{kcol}`").alias("mn"),
-                            F.max(f"`{kcol}`").alias("mx"))
+                            F.max(f"`{kcol}`").alias("mx"),
+                            F.max(F.col(f"`{kcol}`").isNull())
+                            .alias("has_null"))
                        .collect()[0])
-                if row["mn"] is not None:
+                if row["mn"] is not None and not row["has_null"]:
                     keep, _sk = ir.prune_data_files(
                         table_path, [(kcol, ">=", row["mn"]),
                                      (kcol, "<=", row["mx"])],

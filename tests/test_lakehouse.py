@@ -85,6 +85,14 @@ def test_avro_codec_round_trip(tmp_path, codec):
     ac.write_container(p, FULL_SCHEMA, FULL_ROWS, codec=codec)
     assert ac.read_records(p) == FULL_ROWS
     assert ac.read_schema(p) == FULL_SCHEMA
+    # a 38-digit decimal is not rounded to Python's default 28 digits
+    big = {"type": "record", "name": "b", "fields": [
+        {"name": "v", "type": {"type": "bytes", "logicalType": "decimal",
+                               "precision": 38, "scale": 2}}]}
+    vals = ["1" * 35 + "9.11", "-" + "9" * 36 + ".99"]
+    ac.write_container(p, big, [{"v": Decimal(v)} for v in vals],
+                       codec=codec)
+    assert [str(r["v"]) for r in ac.read_records(p)] == vals
 
 
 def test_avro_codec_multi_block_and_empty(tmp_path):
@@ -3836,6 +3844,20 @@ def test_decimal_columns_write_stats_and_prune(spark, tmp_path):
     cands, skipped = ir.prune_data_files(ip, [("d20", "=", 10.15)])
     assert len(cands) == 2 and not skipped
 
+    # a 38-digit bound is kept exactly in the manifest (28-digit decimal
+    # arithmetic would round it below the file's true max)
+    big = spark.range(0, 10).selectExpr(
+        "id", "CAST(concat(repeat('1', 35), id, '.11') AS DECIMAL(38,2)) "
+              "AS d38").coalesce(1)
+    bp = str(wh / "big")
+    write_iceberg(big, bp, mode="error")
+    hi = Decimal("1" * 35 + "9.11")
+    cands, skipped = ir.prune_data_files(bp, [("d38", "=", hi)])
+    assert len(cands) == 1 and not skipped
+    got = read_iceberg(spark, bp, prune=[("d38", "=", hi)]).where(
+        f"d38 = {hi}").collect()
+    assert [r.id for r in got] == [9]
+
     ctx = LightningContext(spark, warehouse=str(tmp_path / "model"))
     ctx.sql("CREATE NAMESPACE lightning.datasource.iceberg")
     ctx.sql(f"REGISTER ICEBERG DATASOURCE w OPTIONS(warehouse '{wh}') "
@@ -6618,6 +6640,43 @@ def test_iceberg_equality_delete_upsert(spark, tmp_path):
             assert int(e["data_file"]["content"]) == 2
             parts.add(e["data_file"]["partition"]["bucket"])
     assert parts == {0, 1}
+
+
+def test_iceberg_purge_null_equality_delete_key(spark, tmp_path):
+    """Equality deletes match keys null-safely, so a NULL delete key
+    removes the NULL-key rows of every older file, including files whose
+    key range (none when all NULL, or one away from the non-NULL delete
+    keys) would pass the key-range prune. PURGE drops the delete
+    manifests, so it must rewrite those files too: the rows after PURGE
+    equal the rows before it."""
+    from lightning_metastore_spark.sources import iceberg_reader as irm
+    from lightning_metastore_spark.sources.iceberg_writer import (
+        purge_iceberg,
+        upsert_iceberg,
+        write_iceberg,
+    )
+
+    path = str(tmp_path / "nullkey")
+    schema = "id long, s string"
+    for i, rows in enumerate(([(None, "a"), (None, "b")],      # all NULL
+                              [(1, "c"), (5, "d"), (9, "e")],  # keyed
+                              [(None, "f"), (100, "g")])):     # partly
+        write_iceberg(spark.createDataFrame(rows, schema).coalesce(1),
+                      path, mode="append" if i else "error")
+    upsert_iceberg(spark, path, spark.createDataFrame(
+        [(None, "n!"), (5, "five!")], schema), ["id"])
+
+    def rows():
+        return sorted((r.id is None, r.id or 0, r.s)
+                      for r in irm.read_iceberg(spark, path).collect())
+
+    before = rows()
+    assert before == [(False, 1, "c"), (False, 5, "five!"),
+                      (False, 9, "e"), (False, 100, "g"),
+                      (True, 0, "n!")]
+    out = purge_iceberg(spark, path)
+    assert out["rows_dropped"] == 4
+    assert rows() == before
 
 
 def test_iceberg_upsert_mode_sink(spark, tmp_path):

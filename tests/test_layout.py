@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 from lightning_metastore_spark.operators.layout import (  # noqa: E402
@@ -35,6 +37,11 @@ def test_range_clustered_write_produces_disjoint_ranges(spark, tmp_path):
     # correctness under the clustered layout
     expect = li.filter(f"l_shipdate >= '{probe}'").count()
     assert back.filter(f"l_shipdate >= '{probe}'").count() == expect
+
+    # ranges are per top-level column: a nested path is refused rather
+    # than answered with no ranges
+    with pytest.raises(ValueError, match="top-level"):
+        file_column_ranges(out, "l_shipdate.x")
 
 
 def test_write_training_shards_deterministic_and_balanced(spark, tmp_path):
